@@ -32,6 +32,24 @@ object Bench {
   def consume(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Between-query hygiene, shared by Bench and Verify: drop the cached
+    * plans a query left, then every persisted RDD.
+    *
+    * clearCache only covers SQL caches — localCheckpoint/persist RDD
+    * blocks a query leaked stay resident until the async cleaner's next
+    * GC, and measurably slowed the SECOND (warm) execution of
+    * checkpoint-heavy queries below the first (memory pressure +
+    * eviction). BLOCKING: with blocking=false the block removal races
+    * the next execution — the r16 full-sweep medians showed checkpoint-
+    * heavy queries' WARM runs consistently slower than their own cold
+    * run (ml_lpa_communities 2.5 s cold → 5.9 s warm median). The wait
+    * lands between queries, outside any timed region. */
+  def releaseCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -85,19 +103,7 @@ object Bench {
           (Option(t.getMessage).getOrElse(t.getClass.getName))
             .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(160) }
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // drop any cached plans a query left
-      // clearCache only covers SQL caches — localCheckpoint/persist RDD
-      // blocks a query leaked stay resident until the async cleaner's
-      // next GC, and measurably slowed the SECOND (warm) execution of
-      // checkpoint-heavy queries below the first (memory pressure +
-      // eviction). Drop them eagerly so runs are independent.
-      // BLOCKING: with blocking=false the block removal races the next
-      // timed execution of the same query — the r16 full-sweep medians
-      // showed checkpoint-heavy queries' WARM runs consistently slower
-      // than their own cold run (ml_lpa_communities 2.5 s cold → 5.9 s
-      // warm median). The wait lands here, between timed regions.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      releaseCaches(spark)
       (dt, err)
     }
 

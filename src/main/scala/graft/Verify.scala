@@ -31,9 +31,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same hygiene as Bench: keep leaked caches/broadcasts from
-      // accumulating across 148 sequential queries in one 8g JVM
-      spark.catalog.clearCache()
+      // same hygiene as Bench: keep leaked caches and persisted RDDs
+      // from accumulating across the sequential queries in one JVM
+      Bench.releaseCaches(spark)
       sinceGC += 1
       if (sinceGC >= 10) { System.gc(); sinceGC = 0 }
     }

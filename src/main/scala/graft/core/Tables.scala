@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, LongType, StringType}
 
 /** Table loading + deterministic-arithmetic helpers.
   *
@@ -273,13 +273,29 @@ object Tables {
     * moment scans; sum(long) itself wrapped at the sf10 rehearsal's
     * 60M rows where Σ|term|·10¹² first passed 2⁶³). */
   def scaledLongSum(c: Column): Column = {
-    val x = round(c * lit(1e12), 0).cast(LongType)
+    val x = scaledLongTerm(c)
     val m = lit((1L << 21) - 1)
     val d = DecimalType(38, 0)
     val hi = sum(shiftright(x, 42)).cast(d) * lit(1L << 42)
     val mid = sum(shiftright(x, 21).bitwiseAND(m)).cast(d) * lit(1L << 21)
     val lo = sum(x.bitwiseAND(m)).cast(d)
     ((hi + mid + lo).cast(DoubleType) / lit(1e12)).cast(DoubleType)
+  }
+
+  /** The per-row term [[scaledLongSum]] adds: round(c·10¹²) as a long,
+    * with Spark's HALF_UP `round`. Callers that sum the terms outside
+    * Catalyst (the Lloyd round kernel) take them from this column, so
+    * the rounding is never re-implemented. */
+  def scaledLongTerm(c: Column): Column = round(c * lit(1e12), 0).cast(LongType)
+
+  /** Driver-side twin of [[scaledLongSum]]'s recombination: given the
+    * three digit sums Σ(t≫42), Σ((t≫21)&M), Σ(t&M) of a group's terms,
+    * the double the aggregate returns — the exact integer
+    * hi·2⁴² + mid·2²¹ + lo through Spark's own DECIMAL→DOUBLE
+    * conversion, then the 10¹² grid division. */
+  def scaledLongValue(hi: Long, mid: Long, lo: Long): Double = {
+    val total = (BigInt(hi) << 42) + (BigInt(mid) << 21) + BigInt(lo)
+    Decimal(BigDecimal(total)).toDouble / 1e12
   }
 
   // ---------------------------------------------------------------------

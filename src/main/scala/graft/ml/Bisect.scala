@@ -1,7 +1,8 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 
 /** Deterministic bisecting (divisive) k-means — reference
   * Orange/clustering/hierarchical.py's divisive complement, surfaced in
@@ -17,83 +18,76 @@ import org.apache.spark.sql.functions._
   *     features to |x| ≤ 1), empty children keep their centroid,
   *   - the new child takes cluster id = split number.
   *
-  * Scale shape: per split iteration ONE scan of the split cluster's
-  * members (broadcast 2×d centroids, map-side combined scaled-long
-  * sums); the assignment table updates via an id-keyed join. No global
+  * Scale shape: each split caches the split cluster's members and runs
+  * its 2-means iterations through Lloyd's round kernel (k = 2): one
+  * `RDD.aggregate` job per iteration over the members' persisted
+  * points, planned once per split — no Catalyst planning or codegen
+  * inside the iteration loop. The kernel's first-minimum argmin sends
+  * ties to the parent (left) child, as the final `<=` reassignment
+  * does. The assignment table updates via an id-keyed join. No global
   * sort, no crossJoin against the corpus — k·E bounded scans total. */
 object Bisect {
 
   /** @return one row per cluster: (cluster, n, min_id), cluster ids in
-    *         split order (0 = root remainder, s = split-s child). */
+    *         split order (0 = root remainder, s = split-s child). The k
+    *         rows are computed eagerly, so no cache or checkpoint
+    *         outlives the call. */
   def fit(df: DataFrame, idCol: Column, feats: Seq[(String, Column)],
           k: Int, iterations: Int): DataFrame = {
     val d = feats.size
+    val xCols = feats.map { case (n, _) => s"x_$n" }
     val base = df.select(idCol.cast("long").as("id") +:
       feats.map { case (n, f) => f.cast("double").as(s"x_$n") }: _*)
       .na.drop().cache()
-    val maxAbs = base.agg(
-      max(greatest(feats.map { case (n, _) => abs(col(s"x_$n")) }: _*)))
-      .head().getDouble(0)
-    require(maxAbs <= 1.0, s"bisect envelope: max|x|=$maxAbs (pre-scale)")
-    // exact split-radix sum — overflow-proof to 2⁴² rows/cluster at
-    // long speed (see Tables.scaledLongSum)
-    def scaledSum(c: Column): Column = graft.core.Tables.scaledLongSum(c)
     def r10(v: Double): Double = {
       val p = v * 1e10
       (if (p >= 0) math.floor(p + 0.5) else math.ceil(p - 0.5)) / 1e10
     }
-    var asg = base.select(col("id"), lit(0).as("cluster"))
-      .localCheckpoint(eager = true)
-    for (s <- 1 until k) {
-      val chosen = asg.groupBy("cluster").agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-        .minBy { case (c, n) => (-n, c) }._1
-      val members = base
-        .join(asg.filter(col("cluster") === chosen).select("id"), "id")
-        .cache()
-      val seeds = members.orderBy(col("id")).limit(2).collect()
-      require(seeds.length == 2, s"bisect: cluster $chosen has < 2 members")
-      var cent = Array.tabulate(2, d)((c, j) => seeds(c).getDouble(j + 1))
-      def dOf(c: Array[Array[Double]], child: Int): Column =
-        (0 until d).map { j =>
-          val e = col(s"x_${feats(j)._1}") - lit(c(child)(j)); e * e
-        }.reduce(_ + _)
-      for (_ <- 1 to iterations) {
-        val cFix = cent
-        val asgIt = members.select(
-          when(dOf(cFix, 0) <= dOf(cFix, 1), 0).otherwise(1).as("child") +:
-            feats.map { case (n, _) => col(s"x_$n") }: _*)
-        val aggs = count(lit(1)).as("n") +:
-          feats.map { case (n, _) => scaledSum(col(s"x_$n")).as(s"s_$n") }
-        val upd = asgIt.groupBy("child").agg(aggs.head, aggs.tail: _*)
-          .collect().map { r =>
-            (r.getInt(0),
-              (r.getLong(1), (1 to d).map(i => r.getDouble(i + 1)).toArray))
-          }.toMap
-        cent = Array.tabulate(2, d) { (c, j) =>
-          upd.get(c) match {
-            case Some((n, sm)) => r10(sm(j) / n)
-            case None => cFix(c)(j)
-          }
-        }
-      }
-      val cFin = cent
-      val childAsg = members.select(col("id"),
-        when(dOf(cFin, 0) <= dOf(cFin, 1), lit(chosen))
-          .otherwise(lit(s)).as("newc"))
-      val prevAsg = asg
-      asg = asg.join(childAsg, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("newc"), col("cluster")).as("cluster"))
+    var asg: DataFrame = null
+    try {
+      val mx = base.agg(max(abs(col(xCols.head))),
+        xCols.tail.map(c => max(abs(col(c)))): _*).head()
+      val maxAbs = (0 until d).map(mx.getDouble).max
+      require(maxAbs <= 1.0, s"bisect envelope: max|x|=$maxAbs (pre-scale)")
+      asg = base.select(col("id"), lit(0).as("cluster"))
         .localCheckpoint(eager = true)
-      graft.core.Tables.unpersistLocalCheckpoint(prevAsg)
-      members.unpersist()
+      for (s <- 1 until k) {
+        val chosen = asg.groupBy("cluster").agg(count(lit(1)).as("n"))
+          .collect().map(r => (r.getInt(0), r.getLong(1)))
+          .minBy { case (c, n) => (-n, c) }._1
+        val members = base
+          .join(asg.filter(col("cluster") === chosen).select("id"), "id")
+          .cache()
+        try {
+          val seeds = members.orderBy(col("id")).limit(2).collect()
+          require(seeds.length == 2,
+            s"bisect: cluster $chosen has < 2 members")
+          val seed = Array.tabulate(2, d)((c, j) => seeds(c).getDouble(j + 1))
+          val pts = Lloyd.points(members, xCols)
+          val cent = try Lloyd.rounds(pts, seed, iterations)((sm, n) => r10(sm / n))
+            finally pts.unpersist(blocking = false)
+          def dist(child: Int): Column = xCols.zipWithIndex.map { case (x, j) =>
+            val e = col(x) - lit(cent(child)(j)); e * e
+          }.reduce(_ + _)
+          val childAsg = members.select(col("id"),
+            when(dist(0) <= dist(1), lit(chosen)).otherwise(lit(s)).as("newc"))
+          val prevAsg = asg
+          asg = asg.join(childAsg, Seq("id"), "left")
+            .select(col("id"),
+              coalesce(col("newc"), col("cluster")).as("cluster"))
+            .localCheckpoint(eager = true)
+          Tables.unpersistLocalCheckpoint(prevAsg)
+        } finally members.unpersist()
+      }
+      val out = asg.groupBy("cluster")
+        .agg(count(lit(1)).as("n"), min(col("id")).as("min_id"))
+      df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(out.collect().sortBy(_.getInt(0)): _*),
+        out.schema)
+    } finally {
+      if (asg != null) Tables.unpersistLocalCheckpoint(asg)
+      base.unpersist()
     }
-    val out = asg.groupBy("cluster")
-      .agg(count(lit(1)).as("n"), min(col("id")).as("min_id"))
-      .orderBy("cluster")
-    base.unpersist()
-    out
   }
 
   /** DuckDB twin of [[fit]]: splits unroll as (size-argmax → members →

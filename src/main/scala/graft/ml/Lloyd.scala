@@ -1,8 +1,10 @@
 package graft.ml
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.core.Tables
 
 /** Deterministic Lloyd k-means (reference Orange/clustering/kmeans.py
@@ -10,25 +12,116 @@ import graft.core.Tables
   * deterministic first-k-by-id seeding, the classic MacQueen init, so
   * the whole trajectory is reproducible and oracle-checkable).
   *
-  * Distributed shape: per iteration ONE scan — assignment is a
-  * codegen'd argmin CASE chain over k literal-free centroid columns
-  * (the centroids ride in as a broadcast 1-row frame so the physical
-  * plan is reused across iterations), the centroid update is a
-  * k-group aggregation with map-side combine. The k×d centroid matrix
-  * lives on the driver. At 100 TB this is the canonical k-means shape:
-  * no global sort (seeding is a TakeOrdered top-k), no crossJoin
-  * against the data, shuffle = k groups per iteration.
+  * Distributed shape: the rounds run in [[rounds]], a kernel planned
+  * ONCE. Catalyst computes each row's features x_j and their grid terms
+  * t_j = [[Tables.scaledLongTerm]](x_j) a single time into a persisted
+  * RDD of per-partition blocks; every round is then ONE
+  * `RDD.aggregate` job over it — per-row argmin assignment plus per-
+  * cluster count and split-radix digit sums, combined map-side — with
+  * no analysis, optimisation, planning or codegen inside the loop (the
+  * shape of MLlib's KMeans). The k×d centroid matrix lives on the
+  * driver and ships in the task closure. No global sort (seeding is a
+  * TakeOrdered top-k), no crossJoin in the rounds, k·(1+3d) longs of
+  * result per partition per round.
   *
-  * Oracle-exactness: centroid sums go through the scaled-long 1e-12
-  * grid (order-independent integer addition; callers pre-scale
-  * features to |x| ≤ 1), centroids round to 10 decimals per step,
-  * distances are fixed-order affine forms both engines evaluate
-  * bit-identically, and argmin ties break to the lowest cluster via
-  * the suffix CASE chain (arm c fires iff d_c ≤ d_j for all j > c,
-  * which picks the FIRST global minimum). Per-cluster inertia reduces
-  * through detSum's DECIMAL(38,14) grid (squared distances exceed the
-  * |t| ≤ 1 long-grid envelope). */
+  * Oracle-exactness: the kernel evaluates the plan it replaced bit for
+  * bit. Distances are Σ_j (x_j − c_cj)² added left to right in
+  * ascending j (the fixed-order affine form both engines evaluate
+  * identically); argmin takes the FIRST minimum, so ties break to the
+  * lowest cluster; centroid sums are exact integer sums of t_j on the
+  * 10⁻¹² grid (order-independent; callers pre-scale features to
+  * |x| ≤ 1), reassembled through [[Tables.scaledLongValue]] into the
+  * double [[Tables.scaledLongSum]] returns; centroids round to 10
+  * decimals per step. The final assignment stays a Catalyst plan:
+  * per-cluster inertia reduces through detSum's grid (squared
+  * distances exceed the |t| ≤ 1 long-grid envelope). */
 object Lloyd {
+
+  /** One partition of [[rounds]]' points, row-major: x(i·d + j) is row
+    * i's feature j and t(i·d + j) its scaled-long grid term. */
+  private[ml] final class Block(val x: Array[Double], val t: Array[Long])
+    extends Serializable
+
+  /** The points of `df`'s double columns `xCols` as persisted blocks —
+    * features and grid terms both computed once, by Catalyst. The
+    * caller unpersists the result. */
+  private[ml] def points(df: DataFrame, xCols: Seq[String]): RDD[Block] = {
+    val d = xCols.size
+    df.select(xCols.map(col) ++
+        xCols.map(c => Tables.scaledLongTerm(col(c))): _*)
+      .rdd.mapPartitions { rows =>
+        val x = Array.newBuilder[Double]
+        val t = Array.newBuilder[Long]
+        rows.foreach { r =>
+          var j = 0
+          while (j < d) { x += r.getDouble(j); t += r.getLong(d + j); j += 1 }
+        }
+        Iterator.single(new Block(x.result(), t.result()))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** `iterations` Lloyd rounds from `seed` over `pts`, one job each. A
+    * cluster with n members and exact feature sum s moves to
+    * `next(s, n)` per coordinate (callers keep their own rounding); an
+    * empty cluster keeps its centroid. */
+  private[ml] def rounds(pts: RDD[Block], seed: Array[Array[Double]],
+                         iterations: Int)(
+      next: (Double, Long) => Double): Array[Array[Double]] = {
+    val k = seed.length
+    val d = seed(0).length
+    // per cluster: n, then (Σ t≫42, Σ (t≫21)&M, Σ t&M) per feature —
+    // Tables.scaledLongSum's digits, so sums cannot overflow before
+    // 2⁴² rows per cluster
+    val w = 1 + 3 * d
+    val m = (1L << 21) - 1
+    var cent = seed
+    for (_ <- 1 to iterations) {
+      val cs = cent
+      val acc = pts.aggregate(new Array[Long](k * w))({ (acc, b) =>
+        var o = 0
+        while (o < b.x.length) {
+          var best = 0
+          var bestD = 0.0
+          var c = 0
+          while (c < k) {
+            // 0.0 + e₀² is e₀² exactly, so this is the left-to-right
+            // e₀² + e₁² + … of the Catalyst distance column
+            var s = 0.0
+            var j = 0
+            while (j < d) { val e = b.x(o + j) - cs(c)(j); s += e * e; j += 1 }
+            if (c == 0 || s < bestD) { best = c; bestD = s }
+            c += 1
+          }
+          val p = best * w
+          acc(p) += 1
+          var j = 0
+          while (j < d) {
+            val t = b.t(o + j)
+            val q = p + 1 + 3 * j
+            acc(q) += t >> 42
+            acc(q + 1) += (t >> 21) & m
+            acc(q + 2) += t & m
+            j += 1
+          }
+          o += d
+        }
+        acc
+      }, { (a, b) =>
+        var i = 0
+        while (i < a.length) { a(i) += b(i); i += 1 }
+        a
+      })
+      cent = Array.tabulate(k) { c =>
+        val n = acc(c * w)
+        if (n == 0) cs(c)
+        else Array.tabulate(d) { j =>
+          val q = c * w + 1 + 3 * j
+          next(Tables.scaledLongValue(acc(q), acc(q + 1), acc(q + 2)), n)
+        }
+      }
+    }
+    cent
+  }
 
   /** @param idCol unique row id — seeds are the k lowest-id rows
     * @param feats (name, expression) pre-scaled to |x| ≤ 1. Rows with a
@@ -43,70 +136,45 @@ object Lloyd {
           k: Int, iterations: Int): DataFrame = {
     val spark = df.sparkSession
     val d = feats.size
+    val xCols = feats.map { case (n, _) => s"x_$n" }
     val base = df.select(idCol.as("id") +:
       feats.map { case (n, f) => f.cast("double").as(s"x_$n") }: _*)
-      .na.drop().cache()
+      .na.drop()
 
-    val maxAbs = base.agg(
-      max(greatest(feats.map { case (n, _) => abs(col(s"x_$n")) }: _*)))
-      .head().getDouble(0)
-    require(maxAbs <= 1.0, s"lloyd envelope: max|x|=$maxAbs (pre-scale)")
-
-    // deterministic seeding: k lowest-id rows (TakeOrdered, no global
-    // sort); parquet doubles are identical in both engines
-    var cent: Array[Array[Double]] = base.orderBy(col("id")).limit(k)
-      .collect().map(r => (1 to d).map(r.getDouble).toArray)
-    require(cent.length == k, s"lloyd: ${cent.length} seed rows < k=$k")
+    val pts = points(base, xCols)
+    val cent = try {
+      val mx = pts.map(_.x.foldLeft(0.0)((m, v) => math.max(m, math.abs(v))))
+        .fold(0.0)(math.max)
+      require(mx <= 1.0, s"lloyd envelope: max|x|=$mx (pre-scale)")
+      // deterministic seeding: k lowest-id rows (TakeOrdered, no global
+      // sort); parquet doubles are identical in both engines
+      val seed = base.orderBy(col("id")).limit(k)
+        .collect().map(r => (1 to d).map(r.getDouble).toArray)
+      require(seed.length == k, s"lloyd: ${seed.length} seed rows < k=$k")
+      rounds(pts, seed, iterations)((s, n) => math.rint(s / n * 1e10) / 1e10)
+    } finally pts.unpersist(blocking = false)
 
     val centSchema = StructType(
       (0 until k).flatMap(c => (0 until d).map(j =>
         StructField(s"cc_${c}_$j", DoubleType, nullable = false))).toArray)
-    def centDF(cs: Array[Array[Double]]) = spark.createDataFrame(
-      java.util.Arrays.asList(Row.fromSeq(cs.flatten.toSeq)), centSchema)
+    val centDF = spark.createDataFrame(
+      java.util.Arrays.asList(Row.fromSeq(cent.flatten.toSeq)), centSchema)
     def distOf(c: Int): Column =
       (0 until d).map { j =>
-        val e = col(s"x_${feats(j)._1}") - col(s"cc_${c}_$j"); e * e
+        val e = col(xCols(j)) - col(s"cc_${c}_$j"); e * e
       }.reduce(_ + _)
     // argmin with ties to the lowest cluster = FIRST index of the array
-    // minimum. Identical value to the previous suffix CASE chain
-    // (arm c: d_c ≤ d_j ∀ j > c), but each distance polynomial is
-    // evaluated ONCE: the chain inlined every d_c into ~k²/2
-    // comparisons, and at k=5·d=8 the iteration stage codegen'd to a
-    // 6.7k-line unit — janino took seconds to compile it and
-    // intermittently bailed to interpreted execution mid-sweep
-    // (ml_kmeans_embeddings cold 13-15 s, the r16 sweep's flaky
-    // InternalCompilerException).
-    def dsArr: Column = array((0 until k).map(distOf): _*)
-    def clusterOf: Column =
+    // minimum, each distance polynomial evaluated ONCE (a suffix CASE
+    // chain inlined every d_c into ~k²/2 comparisons: at k=5·d=8 the
+    // stage codegen'd to a 6.7k-line unit janino took seconds on).
+    val dsArr: Column = array((0 until k).map(distOf): _*)
+    val clusterOf: Column =
       (array_position(dsArr, array_min(dsArr)) - 1).cast("int")
-    // exact split-radix sum — overflow-proof to 2⁴² rows/cluster at
-    // long speed (see Tables.scaledLongSum)
-    def scaledSum(c: Column): Column = Tables.scaledLongSum(c)
-
-    for (_ <- 1 to iterations) {
-      val asg = base.crossJoin(broadcast(centDF(cent)))
-        .select(clusterOf.as("cluster") +:
-          feats.map { case (n, _) => col(s"x_$n") }: _*)
-      val aggs = count(lit(1)).as("n") +:
-        feats.map { case (n, _) => scaledSum(col(s"x_$n")).as(s"s_$n") }
-      val upd = asg.groupBy("cluster").agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          (r.getInt(0),
-            ((1 to d).map(i => r.getDouble(i + 1)).toArray, r.getLong(1)))
-        }.toMap
-      cent = Array.tabulate(k) { c =>
-        upd.get(c) match {
-          case Some((s, n)) =>
-            Array.tabulate(d)(j => math.rint(s(j) / n * 1e10) / 1e10)
-          case None => cent(c) // empty cluster keeps its centroid
-        }
-      }
-    }
 
     // final assignment: sizes + per-cluster inertia + centroid echo —
     // the own-cluster distance is element_at(ds, cluster+1), the same
-    // double the previous per-cluster CASE re-selection produced
-    val asg = base.crossJoin(broadcast(centDF(cent)))
+    // double the round kernel minimised
+    val asg = base.crossJoin(broadcast(centDF))
       .select(clusterOf.as("cluster"), dsArr.as("__ds"))
     val inertiaTerm = element_at(col("__ds"), col("cluster") + 1)
     val grouped = asg.groupBy("cluster").agg(
@@ -117,11 +185,11 @@ object Lloyd {
         when(col("cluster") === c, col(s"cc_${c}_$j")).otherwise(rest)
       }.as(s"c_$n")
     }
-    val out = grouped.crossJoin(broadcast(centDF(cent)))
+    // k rows: sorted in one partition, where a global orderBy would add
+    // a range-bounds sampling job and a shuffle
+    grouped.crossJoin(broadcast(centDF))
       .select(col("cluster") +: col("size") +: col("inertia") +: centCols: _*)
-      .orderBy("cluster")
-    base.unpersist()
-    out
+      .coalesce(1).sortWithinPartitions("cluster")
   }
 
   /** DuckDB twin of [[fit]]: the iteration chain unrolled as

@@ -26,9 +26,10 @@ object GroupByOps {
 
   // --- the 17 aggregations (owgroupby.py:99-183) -------------------------
 
-  // *Exact moments ride the exactSumFast long grid (bit-identical to the
-  // decimal sums while |c|² < 2.25e9, i.e. |c| ≲ 4.7e4 — the only
-  // production caller aggregates l_quantity ≤ 51)
+  // *Exact moments ride the exactSumFast long grid, bit-identical to the
+  // decimal sums while |c| < 2.25e9. Σc² leaves that envelope from
+  // |c| ≈ 4.7e4 (money-scale columns), so varExact/stdExact keep it on
+  // the decimal path (sqFast = false) for any caller.
   def meanExact(c: Column): Column          = exactMeanFast(c)
   def medianExact(c: Column): Column        = round(percentile(c, lit(0.5)), 6)
   def q1Exact(c: Column): Column            = round(percentile(c, lit(0.25)), 6)
@@ -36,8 +37,8 @@ object GroupByOps {
   def medianApprox(c: Column): Column       = percentile_approx(c, lit(0.5), lit(10000))
   def minAgg(c: Column): Column             = min(c)
   def maxAgg(c: Column): Column             = max(c)
-  def stdExact(c: Column): Column           = exactStdSampFast(c)
-  def varExact(c: Column): Column           = exactVarSampFast(c)
+  def stdExact(c: Column): Column           = exactStdSampFast(c, sqFast = false)
+  def varExact(c: Column): Column           = exactVarSampFast(c, sqFast = false)
   def sumExact(c: Column): Column           = exactSumFast(c)
   def spanExact(c: Column): Column          = max(c) - min(c)
   def countDefined(c: Column): Column       = count(c)

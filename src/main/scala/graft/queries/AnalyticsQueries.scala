@@ -106,11 +106,16 @@ object AnalyticsQueries {
         // (ADVICE r16: the old unscaled-decimal oracle relied on the
         // ~1e-11 grid drift being absorbed by ROUND(…,6), a
         // scale-dependent tolerance; with both engines on the same
-        // 1/n-scaled 1e-12 grid the equality is structural at any SF).
-        // The BIGINT scaled sum is the proven Lloyd fitSql twin of
-        // Tables.scaledLongSum.
+        // 1/n-scaled 1e-12 grid the equality is structural). The
+        // HUGEINT sum converts to DOUBLE before the grid division (the
+        // SGD linearGDSql form): a BIGINT cast of the sum would overflow
+        // once Σ round(t·1e12) passes 2⁶³, at ~3.7e7 lineitem rows.
+        // DuckDB 1.0's HUGEINT→DOUBLE is correctly rounded, like Spark's
+        // DECIMAL→DOUBLE, for non-negative sums below 2⁶⁴ (all five
+        // moments are non-negative; ~7e7 rows). Past that it can miss by
+        // an ulp, which only the final ROUND(…, 6) absorbs.
         def lsum(t: String) =
-          s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS BIGINT) / 1e12)"
+          s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS DOUBLE) / 1e12)"
         s"""WITH ranked AS (
            |  SELECT RANK() OVER (ORDER BY l_quantity)
            |           + (COUNT(*) OVER (PARTITION BY l_quantity) - 1) / 2.0 AS rxr,

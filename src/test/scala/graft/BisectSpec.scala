@@ -28,6 +28,36 @@ class BisectSpec extends SparkSpec {
     assert(a == b)
   }
 
+  // seeds are ids 0 and 1; id 2 sits at exactly the same distance
+  // (0.0625) from both
+  private def tie = {
+    import spark.implicits._
+    Seq((0L, 0.0), (1L, 0.5), (2L, 0.25)).toDF("id", "x")
+  }
+
+  test("bisect sends a row equidistant from both children to the parent") {
+    val out = graft.ml.Bisect.fit(tie, col("id"), Seq(("x", col("x"))), 2, 1)
+      .collect()
+    // tie to the parent in the iteration: centroids 0.125 and 0.5, so
+    // id 2 stays with id 0 (to the new child it would be 0 and 0.375)
+    assert(out.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq ==
+      Seq((0, 2L, 0L), (1, 1L, 1L)))
+  }
+
+  test("bisect fails the envelope check and leaves no persisted RDD") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      graft.ml.Bisect.fit(tie, col("id"), Seq(("x", col("x") * 3.0)), 2, 1)
+    }
+    assert(e.getMessage.contains("bisect envelope: max|x|=1.5"))
+    assert(sc.getPersistentRDDs.keySet == before)
+    val out = graft.ml.Bisect.fit(emb, col("vec_id"), feats, 4, 3)
+    assert(sc.getPersistentRDDs.keySet == before)
+    out.collect()
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("cn2SD: positive-WRAcc rules, gamma-decayed weights, default last") {
     val base = Tables.load(spark, sf, "lineitem").select(
       col("l_returnflag").cast("string").as("flag"),

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.ml.Lloyd
 
 /** Pins for deterministic Lloyd k-means: partitioning determinism,
-  * count consistency, and Lloyd's monotone-inertia property. */
+  * count consistency, Lloyd's monotone-inertia property, the round
+  * kernel's tie rule, the envelope check and cache release. */
 class LloydSpec extends SparkSpec {
 
   private def emb = spark.read
@@ -33,5 +34,42 @@ class LloydSpec extends SparkSpec {
     // centroids sit on the 10-decimal grid the oracle rounds to
     val cs = r8.flatMap(r => (0 until 4).map(i => r.getAs[Double](s"c_e$i")))
     assert(cs.forall(v => (math.rint(v * 1e10) / 1e10) == v))
+  }
+
+  // seeds are ids 0 and 1; id 2 sits at exactly the same distance
+  // (0.0625) from both
+  private def tie = {
+    import spark.implicits._
+    Seq((0L, 0.0), (1L, 0.5), (2L, 0.25)).toDF("id", "x")
+  }
+
+  test("a row equidistant from two centroids joins the lower cluster") {
+    val out = Lloyd.fit(tie, col("id"), Seq(("x", col("x"))),
+      k = 2, iterations = 1).collect()
+    // tie to cluster 0 in round 1: centroids 0.125 and 0.5 (to cluster
+    // 1 it would be 0 and 0.375, and id 2 would end in cluster 1)
+    assert(out.map(r => (r.getInt(0), r.getLong(1), r.getDouble(3))).toSeq ==
+      Seq((0, 2L, 0.125), (1, 1L, 0.5)))
+  }
+
+  test("features outside |x| <= 1 fail the envelope check") {
+    val e = intercept[IllegalArgumentException] {
+      Lloyd.fit(tie, col("id"), Seq(("x", col("x") * 3.0)),
+        k = 2, iterations = 1)
+    }
+    assert(e.getMessage.contains("lloyd envelope: max|x|=1.5"))
+  }
+
+  test("fit leaves no persisted RDD behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = fitOn(4, 3)
+    assert(sc.getPersistentRDDs.keySet == before)
+    out.collect()
+    assert(sc.getPersistentRDDs.keySet == before)
+    intercept[IllegalArgumentException] {
+      Lloyd.fit(tie, col("id"), Seq(("x", col("x") * 3.0)), 2, 1)
+    }
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 }
