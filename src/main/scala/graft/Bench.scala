@@ -9,13 +9,51 @@ import org.apache.spark.sql.SparkSession
   * Queries run in sorted-name order (Map iteration order reshuffles whenever
   * a query is added, which moved JIT/codegen warm-up costs between queries
   * and produced phantom 4x per-round "regressions"). Each query is executed
-  * 1 + SPARK_GRAFT_BENCH_WARMRUNS times: the first (cold) execution pays
-  * codegen+JIT and is reported under "queries_cold"; the headline "queries"
-  * value is the (lower-median) warm execution. Warm values are comparable
-  * round-over-round and to isolated probes; the "basis" field records
-  * whether a value is a single sweep or a median.
+  * 1 + [[WarmRuns]] times: the first (cold) execution pays codegen+JIT and
+  * is reported under "queries_cold"; the headline "queries" value is the
+  * median warm execution. Warm values are comparable round-over-round and
+  * to isolated runs (SPARK_GRAFT_BENCH_ONLY=q1,q2); the "basis" field
+  * records the protocol.
   */
 object Bench {
+  /** Warm executions per query; the reported warm value is their median.
+    * A single warm sweep was lightning-prone: in-sweep neighbor garbage
+    * inflated individual queries 3-6× (r15's ann_ivf_pq 4.68×
+    * adjudicated as contamination; r16 repro: dist_corr_matrix 41.8 s
+    * in-sweep vs 6.5 s isolated). The median of 3 absorbs a single
+    * strike (OPTIMIZATION_r16.md). */
+  private val WarmRuns = 3
+
+  /** The one session every query-running main (Bench, Verify, Explain,
+    * RecallBench) and the test suite use; callers set their own log
+    * level. Shuffle partitions = cores (the r1-r16 protocol). */
+  def session(cpus: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects;
+      // read as int64 nanoseconds and convert with exact integer math
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // ContextCleaner frees broadcast/shuffle blocks only after a GC;
+      // the 30 min default periodicGC never fires within one bench run,
+      // so 148 queries' broadcasts pile up in the 8g heap and GC thrash
+      // contaminates later queries' timings (measured 2.4 s → 227 s on
+      // the same query between runs). Clean aggressively instead.
+      .config("spark.cleaner.periodicGC.interval", "30s")
+      // The status stores retain 1000 jobs/stages/executions by default
+      // EVEN WITH THE UI DISABLED; a ~500-execution sweep accumulates
+      // hundreds of MB of plan-graph/metric state in the 8g heap, and
+      // later queries' times degrade from the memory pressure (the
+      // r15/r16 in-sweep contamination: queries measured 3-6x their
+      // isolated wall mid-sweep). Measurement hygiene, not query
+      // tuning: the computation per query is unchanged.
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.sql.ui.retainedExecutions", "4")
+      .getOrCreate()
+
   /** The bench consumer: materialize EVERY operator of the plan.
     *
     * `df.count()` is the WRONG consumer for timing an operator:
@@ -52,7 +90,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // absolute default: the driver's working directory is not guaranteed
     // to be the repo root, and a relative BENCH.json landing elsewhere is
     // indistinguishable from "no full map written"
@@ -62,33 +100,7 @@ object Bench {
     // survives even if the tail capture is flooded by shutdown warnings
     println(s"""{"bench_out":"$outPath"}""")
     Console.out.flush()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default stays = core count (the driver contract / r1-r16
-      // protocol); the override exists to A/B partition-count vs
-      // thread-count effects (the r16 c32>c8 inversion diagnosis)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ContextCleaner frees broadcast/shuffle blocks only after a GC;
-      // the 30 min default periodicGC never fires within one bench run,
-      // so 148 queries' broadcasts pile up in the 8g heap and GC thrash
-      // contaminates later queries' timings (measured 2.4 s → 227 s on
-      // the same query between runs). Clean aggressively instead.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      // The status stores retain 1000 jobs/stages/executions by default
-      // EVEN WITH THE UI DISABLED; a ~500-execution sweep accumulates
-      // hundreds of MB of plan-graph/metric state in the 8g heap, and
-      // later queries' times degrade from the memory pressure (the
-      // r15/r16 in-sweep contamination: queries measured 3-6x their
-      // isolated wall mid-sweep). Measurement hygiene, not query
-      // tuning: the computation per query is unchanged.
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, String) = {
@@ -107,30 +119,6 @@ object Bench {
       (dt, err)
     }
 
-    // SPARK_GRAFT_BENCH_WARMRUNS > 1 reports the LOWER MEDIAN of that
-    // many warm executions per query — the knob for noise-dominated
-    // sweeps (the r11 driver run drifted +24% on byte-identical code;
-    // single-sweep artifacts carry no way to tell drift from
-    // regression). The artifact records the basis either way.
-    // validated + clamped: 0/negative would leave `warms` empty and
-    // throw on the median index AFTER the cold run already paid its
-    // cost; an unparsable value should fail before any query runs
-    // DEFAULT CHANGED r16 (measurement-bug fix, documented in
-    // OPTIMIZATION_r16.md): single-sweep warm values were lightning-
-    // prone — in-sweep neighbor garbage inflated individual queries 3-6×
-    // (r15's ann_ivf_pq 4.68× adjudicated as contamination; r16 repro:
-    // dist_corr_matrix 41.8 s in-sweep vs 6.5 s isolated). The lower-
-    // median of 3 warm runs absorbs a single strike; "basis" still
-    // records the protocol, and the old single-sweep artifacts remain
-    // committed (BENCH_r15.json, plans/r16/BENCH_before_subset.json).
-    val warmRuns = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMRUNS", "3")
-      val n = try raw.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_BENCH_WARMRUNS must be an integer, got: '$raw'")
-      }
-      math.max(1, n)
-    }
     var sinceGC = 0
     // SPARK_GRAFT_BENCH_ONLY (comma list) restricts the sweep — the
     // curated heavy-query median runs at sf10+ time a subset in the
@@ -151,8 +139,8 @@ object Bench {
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       val (cold, errC) = time(fn)
-      val warms = (1 to warmRuns).map(_ => time(fn))
-      val warm = warms.map(_._1).sorted.apply((warmRuns - 1) / 2)
+      val warms = (1 to WarmRuns).map(_ => time(fn))
+      val warm = warms.map(_._1).sorted.apply((WarmRuns - 1) / 2)
       val errW = warms.map(_._2).find(_ != null).orNull
       sinceGC += 1
       if (sinceGC >= 5) { System.gc(); sinceGC = 0 }
@@ -169,10 +157,9 @@ object Bench {
     val errs = results.filter(_._4 != null)
       .map(r => "\"" + r._1 + "\":\"" + r._4 + "\"")
       .mkString("{", ",", "}")
-    // "basis" tells artifact consumers whether warm values are a single
-    // sweep (noise-dominated: r11 drifted +24% on frozen code) or a
-    // median — compare single sweeps only against BENCH_MEDIANS_* floors
-    val basis = if (warmRuns > 1) s"median_of_$warmRuns" else "single_sweep"
+    // "basis" tells artifact consumers that warm values are a median, not
+    // a single sweep (noise-dominated: r11 drifted +24% on frozen code)
+    val basis = s"median_of_$WarmRuns"
     // a SPARK_GRAFT_BENCH_ONLY subset total must never masquerade as a
     // full-sweep total: stamp the active filter + query count into the
     // artifact so a filtered run is self-identifying

@@ -48,7 +48,6 @@ object Tables {
 
   private val Dec = DecimalType(38, 6)
 
-  /** Order-independent exact sum of a double column. */
   /** Frees the block-manager storage behind an EAGER
     * `df.localCheckpoint(...)` result. Iterative operators (Lloyd
     * rounds, BPE merge rounds, label propagation) re-checkpoint a
@@ -66,6 +65,7 @@ object Tables {
       case _ => ()
     }
 
+  /** Order-independent exact sum of a double column. */
   def exactSum(c: Column): Column = sum(c.cast(Dec)).cast(DoubleType)
 
   /** Exact mean = exact sum / non-null count (single double division). */
@@ -118,16 +118,10 @@ object Tables {
   def detSum(term: Column): Column =
     sum(round(term, 12).cast(DecimalType(38, 14))).cast(DoubleType)
 
-  /** Opt-in fast path of [[detSum]] for callers whose terms are
-    * PROVABLY pre-scaled small: bit-identical while
-    * max|term|·10¹² < 2⁵¹ (i.e. |term| ≲ 2.2·10³). Callers must argue
-    * the bound at the call site — the r16 ScoringSpec fixture showed
-    * raw-magnitude terms (LOF reach distances ~10⁹) silently saturate
-    * the long grid where the decimal path stays exact, so this is NOT
-    * a drop-in replacement for the general-purpose detSum. */
   /** Split-radix digit sums of a long column, recombined exactly in
     * DECIMAL(38,0) per GROUP (three scalar ops, never per row): the
-    * [[scaledLongSum]] device. Per-row digits are ≤ 2²¹, so a digit sum
+    * device shared by [[exactSumFast]], [[detSumFast]] and
+    * [[scaledLongSum]]. Per-row digits are ≤ 2²¹, so a digit sum
     * only overflows past ~2⁴¹ rows per group. */
   private def gridDigitSum(k: Column): Column = {
     val m = lit((1L << 21) - 1)
@@ -211,6 +205,13 @@ object Tables {
     (sxy - sx * sy / n) / (n - lit(1))
   }
 
+  /** Opt-in fast path of [[detSum]] for callers whose terms are
+    * PROVABLY pre-scaled small: bit-identical while
+    * max|term|·10¹² < 2⁵¹ (i.e. |term| ≲ 2.2·10³). Callers must argue
+    * the bound at the call site — the r16 ScoringSpec fixture showed
+    * raw-magnitude terms (LOF reach distances ~10⁹) silently saturate
+    * the long grid where the decimal path stays exact, so this is NOT
+    * a drop-in replacement for the general-purpose detSum. */
   def detSumFast(term: Column): Column = {
     // Bit-identical fast path of the decimal formulation
     //   sum(round(term, 12).cast(DecimalType(38, 14))).cast(double).
@@ -238,12 +239,7 @@ object Tables {
     // once per digit sum: ml_linear_regression 3.8 → 8.2 s at sf1m.
     // Digit sums overflow only past 2⁴² rows per group.
     val x = floor(round(term + term * lit(0.0), 12) * lit(1e12) + lit(0.5))
-    val m = lit((1L << 21) - 1)
-    val dec = DecimalType(38, 0)
-    val hi = sum(shiftright(x, 42)).cast(dec) * lit(1L << 42)
-    val mid = sum(shiftright(x, 21).bitwiseAND(m)).cast(dec) * lit(1L << 21)
-    val lo = sum(x.bitwiseAND(m)).cast(dec)
-    concat((hi + mid + lo).cast(StringType), lit("E-12")).cast(DoubleType)
+    concat(gridDigitSum(x).cast(StringType), lit("E-12")).cast(DoubleType)
   }
 
   /** detSum with an explicit rounding scale. Use a COARSER scale for
@@ -272,15 +268,19 @@ object Tables {
     * arithmetic with no per-row Decimal allocation (~3× on the corr
     * moment scans; sum(long) itself wrapped at the sf10 rehearsal's
     * 60M rows where Σ|term|·10¹² first passed 2⁶³). */
-  def scaledLongSum(c: Column): Column = {
-    val x = scaledLongTerm(c)
-    val m = lit((1L << 21) - 1)
-    val d = DecimalType(38, 0)
-    val hi = sum(shiftright(x, 42)).cast(d) * lit(1L << 42)
-    val mid = sum(shiftright(x, 21).bitwiseAND(m)).cast(d) * lit(1L << 21)
-    val lo = sum(x.bitwiseAND(m)).cast(d)
-    ((hi + mid + lo).cast(DoubleType) / lit(1e12)).cast(DoubleType)
-  }
+  def scaledLongSum(c: Column): Column =
+    (gridDigitSum(scaledLongTerm(c)).cast(DoubleType) / lit(1e12)).cast(DoubleType)
+
+  /** DuckDB-SQL twin of [[scaledLongSum]] over the SQL term `t`.
+    * DuckDB sums the BIGINT terms as an exact HUGEINT; the sum converts
+    * to DOUBLE through VARCHAR, because the decimal-string parse is
+    * correctly rounded at any magnitude, like Spark's DECIMAL→DOUBLE,
+    * while DuckDB 1.0's direct HUGEINT→DOUBLE cast can miss by an ulp
+    * for negative sums and sums ≥ 2⁶⁴ (pinned by
+    * tools/test_scaled_sum_sql.py). A BIGINT cast of the sum would
+    * overflow past 2⁶³. */
+  def scaledLongSumSql(t: String): String =
+    s"(CAST(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS VARCHAR) AS DOUBLE) / 1e12)"
 
   /** The per-row term [[scaledLongSum]] adds: round(c·10¹²) as a long,
     * with Spark's HALF_UP `round`. Callers that sum the terms outside

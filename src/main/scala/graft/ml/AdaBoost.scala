@@ -338,8 +338,8 @@ object AdaBoost {
     // engines' libm exp() agree on the branch). Per-TERM bound only —
     // DuckDB's SUM(BIGINT) accumulates in HUGEINT, so like the Spark
     // side's BigInteger spill the sum is exact at any row count; the
-    // fast value is CAST(sum AS DOUBLE)/1e12, the same int→double→÷
-    // rounding sequence as BigInteger.doubleValue()/1e12
+    // fast value is [[graft.core.Tables.scaledLongSumSql]], the same
+    // int→double→÷ rounding sequence as BigInteger.doubleValue()/1e12
     def envSql(r: Int): String = {
       // sel_j are 1-row CTEs; MIN() keeps the aggregate context valid
       val sumAbs = if (r <= 1) "0.0"
@@ -349,15 +349,9 @@ object AdaBoost {
         s"FROM $table${selJoins(r - 1)})"
     }
     def gSumSql(t: String, r: Int): String = {
-      // HUGEINT→VARCHAR→DOUBLE, not HUGEINT→DOUBLE: DuckDB's direct cast
-      // composes double(lower) + double(upper)·2⁶⁴ (double-rounded, can
-      // differ from Java's correctly-rounded BigInteger.doubleValue() by
-      // 1 ulp once the exact sum exceeds 2⁶³). The decimal-string parse
-      // is correctly rounded, so both engines produce the identical
-      // double at ANY magnitude; for sums < 2⁶³ it equals the old direct
-      // cast bit-for-bit.
-      val fast =
-        s"(CAST(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS VARCHAR) AS DOUBLE) / 1e12)"
+      // correctly rounded at any magnitude, like Java's
+      // BigInteger.doubleValue()
+      val fast = scaledLongSumSql(t)
       s"(CASE WHEN (SELECT safe FROM env_$r) THEN $fast ELSE ${sqlDetSum(t)} END)"
     }
     val roundCtes = (1 to rounds).map { r =>

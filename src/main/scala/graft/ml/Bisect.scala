@@ -96,8 +96,6 @@ object Bisect {
              k: Int, iterations: Int): String = {
     val d = featsSql.size
     val names = featsSql.map(_._1)
-    def scaledSum(t: String) =
-      s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS BIGINT) / 1e12)"
     def cc(s: Int, it: Int, c: Int, j: Int) = s"c${s}_${it}_${c}_$j"
     def distExpr(s: Int, it: Int, c: Int, pre: String = "") =
       (0 until d).map { j =>
@@ -131,7 +129,7 @@ object Bisect {
            |  FROM mem_$s CROSS JOIN ct_${s}_$p),
            |gr_${s}_$it AS (
            |  SELECT child, COUNT(*) AS n,
-           |    ${names.map(n => s"${scaledSum(s"x_$n")} AS s_$n")
+           |    ${names.map(n => s"${Tables.scaledLongSumSql(s"x_$n")} AS s_$n")
                .mkString(", ")}
            |  FROM ai_${s}_$it GROUP BY child),
            |ct_${s}_$it AS MATERIALIZED (

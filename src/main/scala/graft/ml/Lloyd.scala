@@ -224,8 +224,6 @@ object Lloyd {
       }
       s"CASE ${arms.mkString(" ")} ELSE ${k - 1} END"
     }
-    def scaledSum(t: String) =
-      s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS BIGINT) / 1e12)"
     val steps = (1 to iterations).map { i =>
       val p = i - 1
       val dAliases = (0 until k).map(c => s"${distExpr(p, c)} AS dd_$c")
@@ -236,7 +234,7 @@ object Lloyd {
          |  FROM feats CROSS JOIN cent$p),
          |grp$i AS (
          |  SELECT cluster, COUNT(*) AS n,
-         |    ${names.map(n => s"${scaledSum(s"x_$n")} AS s_$n").mkString(", ")}
+         |    ${names.map(n => s"${Tables.scaledLongSumSql(s"x_$n")} AS s_$n").mkString(", ")}
          |  FROM asg$i GROUP BY cluster),
          |cent$i AS MATERIALIZED (
          |  SELECT ${(0 until k).flatMap(c => (0 until d).map(j =>

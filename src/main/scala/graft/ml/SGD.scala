@@ -447,7 +447,7 @@ object SGD {
       }
       bw.destroy()
       // bigTotal → correctly-rounded double, then the grid division —
-      // the same two steps the oracle's HUGEINT SUM → DOUBLE cast does
+      // the same two steps as the oracle's Tables.scaledLongSumSql
       acc.map(_.doubleValue() / 1e12)
     }
 
@@ -537,11 +537,9 @@ object SGD {
     // Spark side pre-computes, so both engines pick the same branch —
     // scaled-long inside the envelope, detSum's DECIMAL(38,14) outside.
     def scaledSum(t: String) = {
-      // HUGEINT sum → DOUBLE (correctly rounded), THEN the grid
-      // division — a BIGINT cast here would overflow past 2⁶³ where the
-      // Spark side's BigInteger spill keeps going
-      val fast =
-        s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS DOUBLE) / 1e12)"
+      // exact sum → correctly rounded DOUBLE, THEN the grid division,
+      // like the Spark side's BigInteger spill at any magnitude
+      val fast = scaledLongSumSql(t)
       val slow =
         s"CAST(SUM(CAST(ROUND(($t), 12) AS DECIMAL(38,14))) AS DOUBLE)"
       s"(CASE WHEN (SELECT safe FROM env) THEN $fast ELSE $slow END)"

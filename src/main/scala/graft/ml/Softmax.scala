@@ -257,11 +257,6 @@ object Softmax {
     val init = (0 until c).flatMap(ci =>
       (0 to k).map(j => s"CAST(0.0 AS DOUBLE) AS ${w(ci, j)}"))
       .mkString(", ")
-    // HUGEINT sum → DOUBLE → grid division (matches the Spark side's
-    // BigInteger spill → doubleValue → ÷1e12; a BIGINT cast would
-    // overflow past 2⁶³)
-    def scaledSum(t: String) =
-      s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS DOUBLE) / 1e12)"
     // per-iteration: a probability CTE using DuckDB's lateral SELECT
     // aliases (z/e/se computed once per row), then the 1-row update CTE
     val steps = (1 to iterations).map { i =>
@@ -283,7 +278,7 @@ object Softmax {
       val upd = (0 until c).flatMap { ci =>
         (0 to k).map { j =>
           val term = if (j == k) s"r_$ci" else s"(r_$ci) * ${feat(j)}"
-          s"ROUND(MIN($prev.${w(ci, j)}) - $lr * (${scaledSum(term)} / COUNT(*)" +
+          s"ROUND(MIN($prev.${w(ci, j)}) - $lr * (${scaledLongSumSql(term)} / COUNT(*)" +
             s" + ($lambda * MIN($prev.${w(ci, j)})) / COUNT(*)), 10) AS ${w(ci, j)}"
         }
       }

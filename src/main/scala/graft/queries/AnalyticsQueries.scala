@@ -106,16 +106,9 @@ object AnalyticsQueries {
         // (ADVICE r16: the old unscaled-decimal oracle relied on the
         // ~1e-11 grid drift being absorbed by ROUND(…,6), a
         // scale-dependent tolerance; with both engines on the same
-        // 1/n-scaled 1e-12 grid the equality is structural). The
-        // HUGEINT sum converts to DOUBLE before the grid division (the
-        // SGD linearGDSql form): a BIGINT cast of the sum would overflow
-        // once Σ round(t·1e12) passes 2⁶³, at ~3.7e7 lineitem rows.
-        // DuckDB 1.0's HUGEINT→DOUBLE is correctly rounded, like Spark's
-        // DECIMAL→DOUBLE, for non-negative sums below 2⁶⁴ (all five
-        // moments are non-negative; ~7e7 rows). Past that it can miss by
-        // an ulp, which only the final ROUND(…, 6) absorbs.
-        def lsum(t: String) =
-          s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS DOUBLE) / 1e12)"
+        // 1/n-scaled 1e-12 grid the equality is structural). The sum
+        // converts to DOUBLE correctly rounded at any row count, like
+        // Spark's DECIMAL→DOUBLE.
         s"""WITH ranked AS (
            |  SELECT RANK() OVER (ORDER BY l_quantity)
            |           + (COUNT(*) OVER (PARTITION BY l_quantity) - 1) / 2.0 AS rxr,
@@ -125,9 +118,11 @@ object AnalyticsQueries {
            |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nv FROM lineitem),
            |scaled AS (SELECT rxr / nv AS rx, ryr / nv AS ry
            |           FROM ranked CROSS JOIN nn),
-           |m AS (SELECT ${lsum("rx")} AS sx, ${lsum("ry")} AS sy,
-           |             ${lsum("rx * rx")} AS sxx, ${lsum("ry * ry")} AS syy,
-           |             ${lsum("rx * ry")} AS sxy,
+           |m AS (SELECT ${scaledLongSumSql("rx")} AS sx,
+           |             ${scaledLongSumSql("ry")} AS sy,
+           |             ${scaledLongSumSql("rx * rx")} AS sxx,
+           |             ${scaledLongSumSql("ry * ry")} AS syy,
+           |             ${scaledLongSumSql("rx * ry")} AS sxy,
            |             CAST(COUNT(*) AS DOUBLE) AS n
            |      FROM scaled)
            |SELECT ROUND((n * sxy - sx * sy) /

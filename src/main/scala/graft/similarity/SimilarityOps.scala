@@ -430,27 +430,12 @@ object SimilarityOps {
       val qv = col(vec).cast("array<double>")
       val probeCos = graft.functions.VectorExprs.dotD(qv, col("cent")) /
         (graft.functions.VectorExprs.norm2D(qv) * col("__cn"))
-      // A/B control for the probe-routing scale measurement (RecallBench
-      // --exhaustive): forces the pre-r16 rank-ALL-children-per-query
-      // shape whose O(queries × nlist) cost the two-stage path removes
-      val forceExh = corpus.sparkSession.conf
-        .getOption("graft.ann.exhaustiveProbes").exists(_.toBoolean)
       val probes =
         if (nprobe >= nlist)
           // every list is probed — the exhaustive rank IS the answer
           // (no windowed cut needed, each query keeps all children)
           queries.crossJoin(broadcast(q.children.select(col("list_id"))))
-        else if (forceExh) {
-          val pw = Window.partitionBy(col(id))
-            .orderBy(col("__pc").desc, col("list_id").asc)
-          queries
-            .crossJoin(broadcast(q.children.select(
-              col("list_id"), col("cent"), col("__cn"))))
-            .withColumn("__pc", probeCos)
-            .withColumn("__pr", row_number().over(pw))
-            .filter(col("__pr") <= nprobe)
-            .drop("cent", "__cn", "__pc", "__pr")
-        } else {
+        else {
           // stage 1: rank SURVIVING tops per query (a Lloyd round can
           // empty a cell; a probe routed only to empty cells would
           // silently lose its lists on the join below)

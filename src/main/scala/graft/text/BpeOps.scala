@@ -140,24 +140,10 @@ object BpeOps {
     applyBpe(apply, textCol, merges.map(m => (m._2, m._3)))
   }
 
-  /** Dev-only instrumented trainer (BpeVocabScale): same loop, plus
-    * per-round (round, affectedWords, nanos) — affected is counted
-    * OUTSIDE the timed region so the measurement doesn't distort the
-    * production path it measures. */
-  private[graft] def trainBpeWithStats(docs: DataFrame, textCol: String,
-                                       rounds: Int)
-      : (Seq[(Int, String, String, String, Long)],
-         Seq[(Int, Long, Long)]) = {
-    val stats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    val (merges, _) = trainLoop(docs, textCol, rounds, stats)
-    (merges, stats.toSeq)
-  }
-
   /** The shared merge loop: learns up to `rounds` merges and returns
     * them with the final (still persisted) word table — `trainBpe`
     * ships the merges, `encodeBpe` ships the table. */
-  private def trainLoop(docs: DataFrame, textCol: String, rounds: Int,
-      stats: scala.collection.mutable.ArrayBuffer[(Int, Long, Long)] = null)
+  private def trainLoop(docs: DataFrame, textCol: String, rounds: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
     // EVERY round truncates lineage with an eager localCheckpoint: the
     // word table becomes a flat LogicalRDD, so round r's plan never
@@ -203,8 +189,6 @@ object BpeOps {
         val pat = lit(SEP + a + SEP + SEP + b + SEP)
         val mergedSym = lit(SEP + a + b + SEP)
         val affected = words.filter(col("syms").contains(pat))
-        val affN = if (stats != null) affected.count() else 0L
-        val t0 = if (stats != null) System.nanoTime else 0L
         val oldP = pairCounts(affected)
         val newP = pairCounts(
           affected.withColumn("syms", replace(col("syms"), pat, mergedSym)))
@@ -226,7 +210,6 @@ object BpeOps {
         // superseded round's blocks instead of leaking them until GC
         graft.core.Tables.unpersistLocalCheckpoint(prevCounts)
         graft.core.Tables.unpersistLocalCheckpoint(prevWords)
-        if (stats != null) stats += ((r, affN, System.nanoTime - t0))
         r += 1
       }
     }

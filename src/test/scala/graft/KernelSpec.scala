@@ -1,11 +1,15 @@
 package graft
 
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** Edge-case pins for the hand-written per-row kernels: the fused
   * MinHash signature (MinhashExpr) and the bounded top-k aggregate
   * (TopKAgg) — the two places where a buffer-management bug could
-  * corrupt results without any oracle noticing at fixture scale. */
+  * corrupt results without any oracle noticing at fixture scale — plus
+  * a codegen pin: the iforest and minhash kernels stay inside
+  * whole-stage codegen. */
 class KernelSpec extends SparkSpec {
   import spark.implicits._
   import graft.text.DedupOps
@@ -110,5 +114,56 @@ class KernelSpec extends SparkSpec {
       .select(col("nn")).head()
       .getSeq[org.apache.spark.sql.Row](0).map(e => (e.getDouble(0), e.getLong(1)))
     assert(got == Seq((1.0, 3L), (2.0, 1L)))
+  }
+
+  /** For every ProjectExec of `plan` that evaluates an expression of
+    * class `kernel`: whether it sits inside a whole-stage codegen span
+    * (under a WholeStageCodegenExec with no InputAdapter between). */
+  private def kernelProjects(plan: SparkPlan, kernel: Class[_],
+                             inStage: Boolean = false): Seq[Boolean] =
+    plan match {
+      case a: AdaptiveSparkPlanExec => kernelProjects(a.executedPlan, kernel, inStage)
+      case q: QueryStageExec => kernelProjects(q.plan, kernel)
+      case w: WholeStageCodegenExec => kernelProjects(w.child, kernel, inStage = true)
+      case i: InputAdapter => kernelProjects(i.child, kernel)
+      case p =>
+        val own = p match {
+          case pr: ProjectExec
+              if pr.projectList.exists(_.find(kernel.isInstance).isDefined) =>
+            Seq(inStage)
+          case _ => Nil
+        }
+        own ++ p.children.flatMap(kernelProjects(_, kernel, inStage))
+    }
+
+  test("iforest and minhash kernels compile inside whole-stage codegen") {
+    // with fallback off, a Janino rejection of a kernel's generated code
+    // fails the action instead of silently running the interpreted plan
+    val key = "spark.sql.codegen.fallback"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      // a plan cached by an earlier test would serve the rows without
+      // compiling the kernel
+      spark.catalog.clearCache()
+      val scored = graft.ml.IsolationForest.scoreColumn(
+        graft.core.Tables.load(spark, sf, "lineitem"),
+        Seq("l_quantity", "l_extendedprice"), Seq("l_orderkey", "l_linenumber"),
+        "s", nTrees = 5)
+      val sigs = DedupOps.minhashSignaturesFast(
+        graft.core.Tables.load(spark, sf, "documents"), "doc_id", "text", 3)
+      for ((df, kernel) <- Seq(
+          scored -> classOf[graft.ml.IsolationForest.ScoreExpr],
+          sigs -> classOf[graft.functions.MinhashSigs])) {
+        assert(df.collect().nonEmpty, kernel.getSimpleName)
+        val plan = df.queryExecution.executedPlan
+        val spans = kernelProjects(plan, kernel)
+        assert(spans.nonEmpty && spans.forall(identity),
+          s"${kernel.getSimpleName} outside whole-stage codegen:\n$plan")
+      }
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.similarity.SimilarityOps
 
@@ -30,17 +29,8 @@ object RecallBench {
     // shortlist must exceed the largest ADC-tie cohort (≈ corpus/nlist
     // on tightly clustered corpora — SimilaritySpec's generator pin)
     val shortlist = if (args.length > 6) args(6).toInt else 10 * k
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_EXH_PROBES=1 forces the pre-r16 exhaustive
-    // rank-all-children query-probe shape on the two-level path — the
-    // A/B control for the O(q·nlist) → O(q·(√nlist+nprobe)) claim
-    val exh = sys.env.get("SPARK_GRAFT_EXH_PROBES").contains("1")
-    if (exh) spark.conf.set("graft.ann.exhaustiveProbes", "true")
     import spark.implicits._
 
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
@@ -66,24 +56,15 @@ object RecallBench {
       SimilarityOps.topKCosine(q, e, "vec_id", "embedding", dim, k)))
     println(f"""{"op":"bruteforce","k":$k,"recall":1.0,"cold_sec":$bfCold%.2f,"warm_sec":$bfWarm%.2f}""")
 
-    // SPARK_GRAFT_PROBE_AB=1 runs each ivf config twice — two-stage
-    // then exhaustive probes — sharing the session and ground truth
-    val abModes =
-      if (sys.env.get("SPARK_GRAFT_PROBE_AB").contains("1")) Seq(false, true)
-      else Seq(exh)
     for (np <- nprobes) {
-      for (exhM <- abModes) {
-        spark.conf.set("graft.ann.exhaustiveProbes", exhM.toString)
-        def ivf = SimilarityOps.ivfTopKCosine(
-          q, e, "vec_id", "embedding", dim, k, nlist, np)
-        val (_, c1) = timed(ivf.count())
-        val (got, w1) = timed(pairs(ivf))
-        val r1 = (got intersect bf).size.toDouble / bf.size
-        println(f"""{"op":"ann_ivf","nlist":$nlist,"nprobe":$np,"k":$k,"recall":$r1%.4f,"cold_sec":$c1%.2f,"warm_sec":$w1%.2f,"exh_probes":$exhM}""")
-      }
-      spark.conf.set("graft.ann.exhaustiveProbes", exh.toString)
+      def ivf = SimilarityOps.ivfTopKCosine(
+        q, e, "vec_id", "embedding", dim, k, nlist, np)
+      val (_, c1) = timed(ivf.count())
+      val (got, w1) = timed(pairs(ivf))
+      val r1 = (got intersect bf).size.toDouble / bf.size
+      println(f"""{"op":"ann_ivf","nlist":$nlist,"nprobe":$np,"k":$k,"recall":$r1%.4f,"cold_sec":$c1%.2f,"warm_sec":$w1%.2f}""")
 
-      // m = 0 skips the PQ rows (the probe-routing A/B needs only ivf)
+      // m = 0 skips the PQ rows
       for (m <- ms.filter(_ > 0)) {
         def ivfpq = SimilarityOps.ivfPqTopKCosine(
           q, e, "vec_id", "embedding", dim, k, nlist, np, m = m)

@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared one-per-JVM test session (forked sbt test JVM). */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = Bench.session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
