@@ -1,7 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 /** Orange's typed schema (SURVEY §1.1) over Spark:
@@ -69,7 +68,6 @@ object Schema {
     def attributes: Seq[OVar] = vars.filter(_.role == Role.Feature)
     def classVars: Seq[OVar]  = vars.filter(_.role == Role.Target)
     def metas: Seq[OVar]      = vars.filter(_.role == Role.Meta)
-    def structType: StructType = StructType(vars.map(_.toField))
     def apply(name: String): OVar = vars.find(_.name == name)
       .getOrElse(throw new NoSuchElementException(name))
   }
@@ -88,21 +86,6 @@ object Schema {
     }
     OVar(f.name, kind, role, values)
   })
-
-  /** Stamp role metadata onto existing columns (select w/ alias+metadata —
-    * a narrow, zero-shuffle projection). */
-  def withRoles(df: DataFrame, roles: Map[String, Role]): DataFrame = {
-    val cols = df.schema.fields.map { f =>
-      roles.get(f.name) match {
-        case Some(r) =>
-          val b = new MetadataBuilder().withMetadata(f.metadata)
-            .putString(RoleKey, r.name).build()
-          col(f.name).as(f.name, b)
-        case None => col(f.name)
-      }
-    }
-    df.select(cols.toIndexedSeq: _*)
-  }
 
   /** Orange's recognized missing-value tokens (variable.py:29). */
   val MissingTokens: Set[String] = Set("?", ".", "", "NA", "~", "nan")

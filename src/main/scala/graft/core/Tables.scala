@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
 
 /** Table loading + deterministic-arithmetic helpers.
   *
@@ -82,14 +82,6 @@ object Tables {
   }
 
   def exactStdSamp(c: Column): Column = sqrt(exactVarSamp(c))
-
-  /** Population variance from exact sums (ddof=0). */
-  def exactVarPop(c: Column): Column = {
-    val s  = exactSum(c)
-    val ss = sum((c * c).cast(Dec)).cast(DoubleType)
-    val n  = count(c)
-    (ss - s * s / n) / n
-  }
 
   /** Pearson correlation from exact sums — fixed closed formula, identical
     * bit pattern in Spark and DuckDB. */
@@ -287,16 +279,6 @@ object Tables {
     * Catalyst (the Lloyd round kernel) take them from this column, so
     * the rounding is never re-implemented. */
   def scaledLongTerm(c: Column): Column = round(c * lit(1e12), 0).cast(LongType)
-
-  /** Driver-side twin of [[scaledLongSum]]'s recombination: given the
-    * three digit sums Σ(t≫42), Σ((t≫21)&M), Σ(t&M) of a group's terms,
-    * the double the aggregate returns — the exact integer
-    * hi·2⁴² + mid·2²¹ + lo through Spark's own DECIMAL→DOUBLE
-    * conversion, then the 10¹² grid division. */
-  def scaledLongValue(hi: Long, mid: Long, lo: Long): Double = {
-    val total = (BigInt(hi) << 42) + (BigInt(mid) << 21) + BigInt(lo)
-    Decimal(BigDecimal(total)).toDouble / 1e12
-  }
 
   // ---------------------------------------------------------------------
   // Portable string hash (same value in Spark and in DuckDB oracle SQL)

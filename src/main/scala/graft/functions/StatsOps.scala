@@ -78,15 +78,6 @@ object StatsOps {
       .orderBy(col(rowVar), col(colVar))
   }
 
-  /** Pairwise Pearson correlation for the given column pairs in ONE
-    * aggregation pass (owcorrelations.py:266). */
-  def correlationPairs(df: DataFrame, pairs: Seq[(String, String)]): DataFrame = {
-    val aggs = pairs.map { case (a, b) =>
-      exactCorr(col(a), col(b)).as(s"corr_${a}_$b")
-    }
-    df.agg(aggs.head, aggs.tail: _*)
-  }
-
   /** Benjamini–Hochberg FDR correction (statistics/util.py:757):
     * given (key, pvalue) rows, adjusted = min over j>=i of p_j*n/j,
     * computed with two windows (rank + reverse running min). */

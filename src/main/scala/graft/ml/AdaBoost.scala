@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,10 +19,13 @@ import graft.queries.SqlGen._
   * expression). R rounds = R scans + 1 final accuracy scan. The model
   * (R stumps + alphas) is driver-side and tiny.
   *
-  * Oracle-exactness (same device as [[SGD]]): weighted errors go through
-  * the order-independent 12-decimal sum and are rounded to 10 decimals
-  * before the argmin, alphas are rounded to 10 decimals, so Spark and
-  * the CTE-unrolled DuckDB twin select identical stump sequences.
+  * The JVM rounds run on the [[Rounds]] kernel (bit cache, exact
+  * accumulator, one pass per round).
+  *
+  * Oracle-exactness: weighted errors go through the order-independent
+  * 12-decimal sum and are rounded to 10 decimals before the argmin,
+  * alphas are rounded to 10 decimals, so Spark and the CTE-unrolled
+  * DuckDB twin select identical stump sequences.
   */
 object AdaBoost {
 
@@ -80,142 +84,53 @@ object AdaBoost {
 
     var picked = Vector.empty[(Int, Double, Double)] // (candIdx, alpha, err)
     def staged = base.crossJoin(broadcast(stDF(picked)))
-    val cnts = base.agg(count(lit(1)), count(col("y"))).head()
-    val nRows = cnts.getLong(0)
-    val yNullFree = cnts.getLong(1) == nRows
-
-    // Primitive-array cache of the CANDIDATE VALUES [h_0..h_{K-1}, y]:
-    // the 2K+1-sum round aggregate is the same wide-aggregate shape
-    // that collapsed to interpreted eval in SGD.linearGD (the stump
-    // h's are ±1 and never null — when(null ≤ thr) takes the otherwise
-    // branch). JVM rounds accumulate the identical HALF_UP scaled
-    // longs with the identical expression order (F folds all round
-    // slots incl. the zero-padded ones; Math.exp is the same JVM exp
-    // codegen calls), so the selection trajectory — and the CTE oracle
-    // — are bit-unchanged. Rounds outside the scaled envelope (or a
-    // nullable y) fall back to the aggregate path.
     val kCand = cands.size
-    // Math.round (post-JDK-8041734) is exact half-up on the double's real
-    // value — no floor(t+0.5) double-rounding at 0.49999999999999994 and
-    // no ties-to-even drift when boosted weights push t past 2^52;
-    // negated for t < 0 it is HALF_UP away from zero, matching DuckDB's
-    // std::round-based ROUND and Spark round()'s BigDecimal HALF_UP.
-    def roundScaled(v: Double): Long = {
-      val t = v * 1e12
-      if (t >= 0) Math.round(t) else -Math.round(-t)
-    }
-    // Every cached value is ±1 by construction (stump outputs and the
-    // {−1,+1} label), so the cache is a packed SIGN bitset — bit set ↔
-    // +1.0 — at ⌈(K+1)/64⌉ longs per row instead of K+1 doubles. At the
-    // sf10 rehearsal the double form was ~9 GB at 60M rows and spilled
-    // MEMORY_AND_DISK; packed it is one long per row. Arithmetic is
-    // unchanged bit-for-bit: ±1.0 multiplications become sign flips and
-    // w·(1−y·h)/2 is EXACTLY w when the bits differ and +0.0 when equal
-    // ((1−(−1))/2 = 1.0 and w·1.0 = w are exact in IEEE754), so every
-    // scaled-long sum — and the CTE oracle — sees identical terms.
-    // Chunked: one flat Array[Long] per ≤2¹⁶ rows (stride `words`),
-    // not one tiny array per row — the per-row form still paid ~32 B
-    // of object header per 8 B payload, which at the sf100 rehearsal's
-    // 600M rows turned a 4.8 GB bitset into a ~24 GB spilling cache.
-    val words = (kCand + 1 + 63) >> 6
-    @inline def bit(ch: Array[Long], off: Int, i: Int): Boolean =
-      ((ch(off + (i >> 6)) >>> (i & 63)) & 1L) != 0L
-    lazy val hArr = {
-      val hDf = base.select(cands.map(c => h(c)).zipWithIndex
-        .map { case (c, k) => c.as(s"h_$k") } :+ col("y"): _*)
-      val kk = kCand; val nw = words
-      val chunkRows = 1 << 16
-      val r = hDf.rdd.mapPartitions { rows =>
-        new Iterator[Array[Long]] {
-          def hasNext: Boolean = rows.hasNext
-          def next(): Array[Long] = {
-            val buf = new Array[Long](chunkRows * nw)
-            var n = 0
-            while (n < chunkRows && rows.hasNext) {
-              val row = rows.next()
-              val off = n * nw
-              var i = 0
-              while (i <= kk) {
-                val v = row.getDouble(i)
-                if (v == 1.0) buf(off + (i >> 6)) |= 1L << (i & 63)
-                else if (v != -1.0) throw new IllegalArgumentException(
-                  s"AdaBoost cache expects ±1 values, got $v (is y in {-1,+1}?)")
-                i += 1
-              }
-              n += 1
-            }
-            if (n == chunkRows) buf
-            else java.util.Arrays.copyOf(buf, n * nw)
-          }
-        }
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      r
-    }
-    var hArrUsed = false
-    // Exact scaled-long accumulation with NO row-count envelope: the
-    // per-partition long accumulators spill into BigIntegers whenever
-    // they approach the long range, so Σ round12(term)·10¹² is exact at
-    // ANY n (integer addition is order-independent). The final value is
-    // bigTotal→double (correctly rounded, like DuckDB's HUGEINT→DOUBLE
-    // cast of its overflow-free SUM(BIGINT)) divided by 1e12 — the same
-    // two-step rounding both the previous long path and the oracle's
-    // fast branch perform, so previously-in-envelope trajectories are
-    // bit-unchanged. (The old n·B ≤ 8·10⁶ guard silently excluded the
-    // sf1 replica and pushed every round onto 7 DECIMAL(38) sums over
-    // 6M rows — a 47× cliff for an algorithm that is one scan per
-    // round.)
+    // Every candidate value is ±1 by construction (stump outputs and the
+    // {−1,+1} label — the stump h's are never null: when(null ≤ thr)
+    // takes the otherwise branch), so the JVM rounds run on a [[Rounds]]
+    // bit cache of [h_0..h_{K-1}, y], bit set ↔ +1.0: the 2K+1-sum round
+    // aggregate is the wide-aggregate shape that falls out of codegen.
+    // Arithmetic is unchanged bit-for-bit: ±1.0 multiplications become
+    // sign flips and w·(1−y·h)/2 is EXACTLY w when the bits differ and
+    // +0.0 when equal, F folds all round slots incl. the zero-padded
+    // ones, and Math.exp is the same JVM exp codegen calls — so every
+    // scaled-long sum, the selection trajectory and the CTE oracle see
+    // identical terms. Rounds outside the scaled envelope (or a nullable
+    // y) fall back to the aggregate path.
+    var hArr: RDD[Array[Long]] = null
+    // each round's 1 + K weight sums on the 10⁻¹² grid, exact at ANY n:
+    // the value is bigTotal→double (correctly rounded, like the oracle's
+    // VARCHAR cast of its overflow-free SUM(BIGINT)) divided by 1e12
     def jvmRoundSums(ks: Array[Int], as: Array[Double]): Array[Double] = {
-      hArrUsed = true
-      val kk = kCand; val rr = rounds
-      val bc = spark.sparkContext.broadcast((ks, as))
-      val SpillAt = Long.MaxValue >> 1
-      val acc = hArr.mapPartitions { it =>
-        val (bks, bas) = bc.value
-        val a = new Array[Long](kk + 1)
-        val big = Array.fill(kk + 1)(java.math.BigInteger.ZERO)
-        def spill(i: Int): Unit = {
-          big(i) = big(i).add(java.math.BigInteger.valueOf(a(i)))
-          a(i) = 0L
-        }
-        val nw = (kk + 1 + 63) >> 6
-        while (it.hasNext) {
-          val ch = it.next(); val m = ch.length / nw
-          var ri = 0
-          while (ri < m) {
-            val off = ri * nw
-            val yb = bit(ch, off, kk)
-            var f = 0.0; var j = 0
-            while (j < rr) {
-              val kj = bks(j)
-              if (kj >= 0) f += (if (bit(ch, off, kj)) bas(j) else -bas(j))
-              j += 1
-            }
-            val w = Math.exp(if (yb) -f else f)
-            val rw = roundScaled(w)
-            a(0) += rw
-            if (a(0) > SpillAt || a(0) < -SpillAt) spill(0)
-            // w·(1−y·h_k)/2 is exactly w when y ≠ h_k and +0.0 when
-            // equal, so the candidate term reuses the already-rounded rw
-            var k = 0
-            while (k < kk) {
-              if (bit(ch, off, k) != yb) {
-                a(k + 1) += rw
-                if (a(k + 1) > SpillAt || a(k + 1) < -SpillAt) spill(k + 1)
-              }
-              k += 1
-            }
-            ri += 1
+      if (hArr == null) hArr = Rounds.bits(
+        base.select(cands.map(h).zipWithIndex
+          .map { case (c, k) => c.as(s"h_$k") } :+ col("y"): _*),
+        clear = -1.0,
+        v => s"AdaBoost cache expects ±1 values, got $v (is y in {-1,+1}?)")
+      val kk = kCand; val rr = rounds; val nw = Rounds.words(kCand + 1)
+      val acc = Rounds.pass(hArr, (ks, as), kk + 1) { case ((bks, bas), ch, a) =>
+        var off = 0
+        while (off < ch.length) {
+          val yb = Rounds.bit(ch, off, kk)
+          var f = 0.0; var j = 0
+          while (j < rr) {
+            val kj = bks(j)
+            if (kj >= 0) f += (if (Rounds.bit(ch, off, kj)) bas(j) else -bas(j))
+            j += 1
           }
+          val rw = Rounds.roundScaled(Math.exp(if (yb) -f else f), 1e12)
+          a.add(0, rw)
+          // w·(1−y·h_k)/2 is exactly w when y ≠ h_k and +0.0 when
+          // equal, so the candidate term reuses the already-rounded rw
+          var k = 0
+          while (k < kk) {
+            if (Rounds.bit(ch, off, k) != yb) a.add(k + 1, rw)
+            k += 1
+          }
+          off += nw
         }
-        var i = 0
-        while (i <= kk) { spill(i); i += 1 }
-        Iterator.single(big)
-      }.treeReduce { (p, q) =>
-        var i = 0; while (i <= kk) { p(i) = p(i).add(q(i)); i += 1 }; p
       }
-      bc.destroy()
-      acc.map(_.doubleValue() / 1e12)
+      Array.tabulate(kk + 1)(acc.value(_, 1e12))
     }
     def paddedKA: (Array[Int], Array[Double]) = {
       val ks = Array.fill(rounds)(-1); val as = Array.fill(rounds)(0.0)
@@ -224,79 +139,70 @@ object AdaBoost {
       (ks, as)
     }
 
-    for (_ <- 1 to rounds) {
-      // Scaled-long gradient sums when provably in envelope (same device
-      // as SGD.linearGD — DECIMAL(38) accumulation measured ~0.4 s per
-      // sum per 600k rows, and every round aggregates 2K+1 sums): each
-      // term is bounded by the weight bound B = exp(Σ|alpha|), so
-      // round(t·10¹²) stays an exact double while n·B ≤ 8·10⁶ keeps the
-      // long accumulator far from overflow. B is rounded to 6 decimals
-      // so both engines' libm exp() agree on the branch; outside the
-      // envelope, fall back to the order-independent DECIMAL sum.
-      val sumAbs = picked.foldLeft(0.0)((s, p) => s + math.abs(p._2))
-      val bnd = math.rint(math.exp(sumAbs) * 1e6) / 1e6
-      // per-TERM envelope only: |t|·10¹² must stay an exact double
-      // (bnd ≤ 8000 ⇒ t·10¹² < 2⁵³); the accumulators are exact at any
-      // row count (BigInteger spill / the oracle's HUGEINT SUM), so n
-      // no longer gates the fast path
-      val scaledSafe = nRows >= 1 && bnd <= 8000
-      val sums: Int => Double =
-        if (scaledSafe && yNullFree) {
-          val (ks, as) = paddedKA
-          val a = jvmRoundSums(ks, as); a(_)
-        } else {
-          val w = exp(-col("y") * fExpr)
-          val aggs = detSum(w).as("wsum") +: cands.zipWithIndex.map {
-            case (c, k) =>
-              detSum(w * (lit(1.0) - col("y") * h(c)) / 2.0).as(s"e_$k")
-          }
-          val row = staged.agg(aggs.head, aggs.tail: _*).head()
-          row.getDouble(_)
-        }
-      val wsum = sums(0)
-      val errs = cands.indices.map(k =>
-        k -> math.rint(sums(k + 1) / wsum * 1e10) / 1e10)
-      val (bestK, err) = errs.minBy { case (k, e) => (e, k) }
-      val ec = clampEps(err)
-      val alpha = math.rint(0.5 * math.log((1.0 - ec) / ec) * 1e10) / 1e10
-      picked :+= ((bestK, alpha, err))
-    }
-    val acc =
-      if (hArrUsed && yNullFree) {
-        val (ks, as) = paddedKA
-        val kk = kCand; val rr = rounds
-        val bc = spark.sparkContext.broadcast((ks, as))
-        val (c, t) = hArr.mapPartitions { it =>
-          val (bks, bas) = bc.value
-          var c = 0L; var t = 0L
-          val nw = (kk + 1 + 63) >> 6
-          while (it.hasNext) {
-            val ch = it.next(); val m = ch.length / nw
-            var ri = 0
-            while (ri < m) {
-              val off = ri * nw
-              var f = 0.0; var j = 0
-              while (j < rr) {
-                val kj = bks(j)
-                if (kj >= 0) f += (if (bit(ch, off, kj)) bas(j) else -bas(j))
-                j += 1
-              }
-              if ((f > 0) == bit(ch, off, kk)) c += 1
-              t += 1
-              ri += 1
+    val acc = try {
+      val cnts = base.agg(count(lit(1)), count(col("y"))).head()
+      val nRows = cnts.getLong(0)
+      val yNullFree = cnts.getLong(1) == nRows
+      for (_ <- 1 to rounds) {
+        // Scaled-long weight sums when provably in envelope (DECIMAL(38)
+        // accumulation measured ~0.4 s per sum per 600k rows, and every
+        // round aggregates 2K+1 sums): each term is bounded by the weight
+        // bound B = exp(Σ|alpha|), rounded to 6 decimals so both engines'
+        // libm exp() agree on the branch. Per-TERM envelope only: |t|·10¹²
+        // must stay an exact double (B ≤ 8000 ⇒ t·10¹² < 2⁵³); the sums
+        // are exact at any row count (Rounds.Acc / the oracle's HUGEINT
+        // SUM), so n does not gate the fast path. Outside the envelope,
+        // fall back to the order-independent DECIMAL sum.
+        val sumAbs = picked.foldLeft(0.0)((s, p) => s + math.abs(p._2))
+        val bnd = math.rint(math.exp(sumAbs) * 1e6) / 1e6
+        val scaledSafe = nRows >= 1 && bnd <= 8000
+        val sums: Int => Double =
+          if (scaledSafe && yNullFree) {
+            val (ks, as) = paddedKA
+            val a = jvmRoundSums(ks, as); a(_)
+          } else {
+            val w = exp(-col("y") * fExpr)
+            val aggs = detSum(w).as("wsum") +: cands.zipWithIndex.map {
+              case (c, k) =>
+                detSum(w * (lit(1.0) - col("y") * h(c)) / 2.0).as(s"e_$k")
             }
+            val row = staged.agg(aggs.head, aggs.tail: _*).head()
+            row.getDouble(_)
           }
-          Iterator.single((c, t))
-        }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2))
-        bc.destroy()
-        c.toDouble / t.toDouble
+        val wsum = sums(0)
+        val errs = cands.indices.map(k =>
+          k -> math.rint(sums(k + 1) / wsum * 1e10) / 1e10)
+        val (bestK, err) = errs.minBy { case (k, e) => (e, k) }
+        val ec = clampEps(err)
+        val alpha = math.rint(0.5 * math.log((1.0 - ec) / ec) * 1e10) / 1e10
+        picked :+= ((bestK, alpha, err))
+      }
+      if (hArr != null && yNullFree) {
+        val kk = kCand; val rr = rounds; val nw = Rounds.words(kCand + 1)
+        val ct = Rounds.pass(hArr, paddedKA, 2) { case ((bks, bas), ch, a) =>
+          var off = 0
+          while (off < ch.length) {
+            var f = 0.0; var j = 0
+            while (j < rr) {
+              val kj = bks(j)
+              if (kj >= 0) f += (if (Rounds.bit(ch, off, kj)) bas(j) else -bas(j))
+              j += 1
+            }
+            if ((f > 0) == Rounds.bit(ch, off, kk)) a.add(0, 1L)
+            a.add(1, 1L)
+            off += nw
+          }
+        }
+        ct.long(0).toDouble / ct.long(1).toDouble
       } else {
         val pred = when(fExpr > 0, 1.0).otherwise(-1.0)
         staged.agg((sum(when(pred === col("y"), 1L).otherwise(0L)) /
           count(lit(1))).as("acc")).head().getDouble(0)
       }
-    if (hArrUsed) hArr.unpersist(false)
-    base.unpersist()
+    } finally {
+      if (hArr != null) hArr.unpersist(false)
+      base.unpersist()
+    }
 
     val schema = StructType(Seq(
       StructField("round", IntegerType, nullable = false),

@@ -19,8 +19,8 @@ import graft.core.Tables
   *   - the new child takes cluster id = split number.
   *
   * Scale shape: each split caches the split cluster's members and runs
-  * its 2-means iterations through Lloyd's round kernel (k = 2): one
-  * `RDD.aggregate` job per iteration over the members' persisted
+  * its 2-means iterations through Lloyd's round kernel (k = 2, on
+  * [[Rounds]]): one job per iteration over the members' persisted
   * points, planned once per split — no Catalyst planning or codegen
   * inside the iteration loop. The kernel's first-minimum argmin sends
   * ties to the parent (left) child, as the final `<=` reassignment

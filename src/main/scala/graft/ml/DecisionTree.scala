@@ -11,9 +11,8 @@ import graft.queries.SqlGen._
   * discretized inputs; multiway ID3-style splits on entropy, which is
   * what Orange's tree does for discrete attributes).
   *
-  * Unlike the MLlib CART wrapper (MLlibLearners.decisionTree, kept for
-  * the forest/GBT family), the induction here is expressed as pure
-  * contingency algebra so it is oracle-verifiable:
+  * The induction is expressed as pure contingency algebra so it is
+  * oracle-verifiable:
   *
   *  - level 1: ONE map-side-combined groupBy builds the (feature, value,
   *    class) contingency; the split criterion H(class|feature) is a

@@ -13,14 +13,13 @@ import graft.core.Tables._
   * (Friedman 2001 + the XGBoost gain; arXiv:1603.02754 §2.2) over
   * depth-1 regression stumps on a fixed candidate-threshold grid.
   *
-  * Distributed shape — the same device as [[AdaBoost.fitStumps]]:
-  * per-round "sample state" (score F_i, probability p_i, residual
-  * y_i − p_i, hessian p_i(1−p_i)) is never materialized; each round
-  * recomputes it from the picked-stump list (tiny, driver-side) while
-  * scoring EVERY candidate split in ONE pass over a primitive-array
-  * cache — 2K+2 scaled-long sums accumulated partition-locally, then
-  * treeReduce. R rounds = R passes + 1 accuracy pass; no MLlib fit
-  * loop, no per-tree job storm.
+  * Distributed shape: per-round "sample state" (score F_i, probability
+  * p_i, residual y_i − p_i, hessian p_i(1−p_i)) is never materialized;
+  * each round recomputes it from the picked-stump list (tiny,
+  * driver-side) while scoring EVERY candidate split in ONE
+  * [[Rounds.pass]] over a [[Rounds]] bit cache — 2K+2 scaled-long sums
+  * accumulated partition-locally. R rounds = R passes + 1 accuracy
+  * pass; no MLlib fit loop, no per-tree job storm.
   *
   * Oracle-exactness: gradient/hessian sums go through the 1e-12
   * scaled-long grid (order-independent integer addition; terms are
@@ -99,164 +98,96 @@ object GradBoost {
     val nonNull = feats.map(_._2.isNotNull).reduce(_ && _) && y01.isNotNull
     val base = df.filter(nonNull)
       .select(iCols ++: (y01.cast("double").as("y") +: subCols): _*)
-    val width = kC + 1 + (if (doSub) rounds else 0)
     // Every cached column is binary by construction (split indicators,
-    // the {0,1} label, bag-inclusion draws), so the cache is a packed
-    // bitset — ⌈width/64⌉ longs per row instead of `width` doubles. At
-    // the sf10 rehearsal the 16-double form was 7.7 GB and spilled
-    // MEMORY_AND_DISK; one long per row fits any executor. The values
-    // themselves are unchanged (1.0/0.0 ↔ bit set/clear), so every
+    // the {0,1} label, bag-inclusion draws), so the cache is a [[Rounds]]
+    // bit cache, bit set ↔ 1.0: the values are unchanged, so every
     // downstream sum — and the CTE oracle — is bit-identical.
-    // Chunked: one flat Array[Long] per ≤2¹⁶ rows (stride `words`) —
-    // the per-row form still paid ~32 B of header per 8 B payload,
-    // which at 600M rows re-created the spill the bitset removed.
-    val words = (width + 63) >> 6
-    val arr = {
-      val w = width; val nw = words
-      val chunkRows = 1 << 16
-      val r = base.rdd.mapPartitions { rows =>
-        new Iterator[Array[Long]] {
-          def hasNext: Boolean = rows.hasNext
-          def next(): Array[Long] = {
-            val buf = new Array[Long](chunkRows * nw)
-            var n = 0
-            while (n < chunkRows && rows.hasNext) {
-              val row = rows.next()
-              val off = n * nw
-              var i = 0
-              while (i < w) {
-                val v = row.getDouble(i)
-                if (v == 1.0) buf(off + (i >> 6)) |= 1L << (i & 63)
-                else if (v != 0.0) throw new IllegalArgumentException(
-                  s"GradBoost cache expects binary columns, got $v (is y01 in {0,1}?)")
-                i += 1
-              }
-              n += 1
-            }
-            if (n == chunkRows) buf
-            else java.util.Arrays.copyOf(buf, n * nw)
-          }
-        }
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      r
-    }
-    @inline def bit(ch: Array[Long], off: Int, i: Int): Boolean =
-      ((ch(off + (i >> 6)) >>> (i & 63)) & 1L) != 0L
-
-    // f0 = ln(p̄/(1−p̄)) from exact long counts (same division shape as
-    // the SQL twin: SUM(y)::DOUBLE / COUNT(*))
-    val (nRows, nPos) = {
-      val nw = words
-      val (n, p) = arr.mapPartitions { it =>
-        var n = 0L; var p = 0L
-        while (it.hasNext) {
-          val ch = it.next(); val m = ch.length / nw
-          n += m
-          var ri = 0
-          while (ri < m) { if (bit(ch, ri * nw, kC)) p += 1; ri += 1 }
-        }
-        Iterator.single((n, p))
-      }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2))
-      (n, p)
-    }
-    val pbar = nPos.toDouble / nRows.toDouble
-    val f0 = r10(math.log(pbar / (1.0 - pbar)))
-    // 1e-12 grid while Σ|term|·1e12 stays far from 2^63 (terms ≤ 1);
-    // the 100 TB path coarsens to 1e-6 — same branch in the SQL twin
-    val grid = if (nRows <= 8000000L) 1e12 else 1e6
-    def rs(v: Double): Long = {
-      val t = v * grid
-      if (t >= 0) Math.round(t) else -Math.round(-t)
-    }
-
+    val arr = Rounds.bits(base, clear = 0.0,
+      v => s"GradBoost cache expects binary columns, got $v (is y01 in {0,1}?)")
+    val nw = Rounds.words(base.schema.size)
     // picked: (candIdx, gammaL, gammaR, gain)
     var picked = Vector.empty[(Int, Double, Double, Double)]
-    for (r <- 1 to rounds) {
-      val allowed = allowedCands(cands, featNames, r, colsample).toArray
-      val nA = allowed.length
-      val bc = spark.sparkContext.broadcast(
-        (picked.map(p => (p._1, p._2, p._3)).toArray, allowed))
-      val subIdx = if (doSub) kC + r else -1
-      val nwS = words
-      val sums = arr.mapPartitions { it =>
-        val (pk, al) = bc.value
-        val a = new Array[Long](2 + 2 * al.length)
-        while (it.hasNext) {
-          val ch = it.next(); val m = ch.length / nwS
-          var ri = 0
-          while (ri < m) {
-            val off = ri * nwS
-            if (subIdx < 0 || bit(ch, off, subIdx)) {
+    val acc = try {
+      // f0 = ln(p̄/(1−p̄)) from exact long counts (same division shape as
+      // the SQL twin: SUM(y)::DOUBLE / COUNT(*))
+      val np = Rounds.pass(arr, kC, 2) { (y, ch, a) =>
+        var off = 0
+        while (off < ch.length) {
+          a.add(0, 1L)
+          if (Rounds.bit(ch, off, y)) a.add(1, 1L)
+          off += nw
+        }
+      }
+      val nRows = np.long(0)
+      val pbar = np.long(1).toDouble / nRows.toDouble
+      val f0 = r10(math.log(pbar / (1.0 - pbar)))
+      // 1e-12 grid while Σ|term|·1e12 stays far from 2^63 (terms ≤ 1);
+      // the 100 TB path coarsens to 1e-6 — same branch in the SQL twin
+      val grid = if (nRows <= 8000000L) 1e12 else 1e6
+
+      for (r <- 1 to rounds) {
+        val allowed = allowedCands(cands, featNames, r, colsample).toArray
+        val nA = allowed.length
+        val subIdx = if (doSub) kC + r else -1
+        val sums = Rounds.pass(arr,
+            (picked.map(p => (p._1, p._2, p._3)).toArray, allowed),
+            2 + 2 * nA) { case ((pk, al), ch, a) =>
+          var off = 0
+          while (off < ch.length) {
+            if (subIdx < 0 || Rounds.bit(ch, off, subIdx)) {
               var f = f0; var j = 0
               while (j < pk.length) {
                 val (kj, gl, gr) = pk(j)
-                f += lr * (if (bit(ch, off, kj)) gl else gr)
+                f += lr * (if (Rounds.bit(ch, off, kj)) gl else gr)
                 j += 1
               }
               val p = 1.0 / (1.0 + Math.exp(-f))
-              val resid = (if (bit(ch, off, kC)) 1.0 else 0.0) - p
-              val h = p * (1.0 - p)
-              a(0) += rs(resid); a(1) += rs(h)
+              val resid = Rounds.roundScaled(
+                (if (Rounds.bit(ch, off, kC)) 1.0 else 0.0) - p, grid)
+              val h = Rounds.roundScaled(p * (1.0 - p), grid)
+              a.add(0, resid); a.add(1, h)
               var i = 0
               while (i < al.length) {
-                if (bit(ch, off, al(i))) {
-                  a(2 + 2 * i) += rs(resid); a(3 + 2 * i) += rs(h)
+                if (Rounds.bit(ch, off, al(i))) {
+                  a.add(2 + 2 * i, resid); a.add(3 + 2 * i, h)
                 }
                 i += 1
               }
             }
-            ri += 1
+            off += nw
           }
         }
-        Iterator.single(a)
-      }.treeReduce { (p, q) =>
-        var i = 0; while (i < p.length) { p(i) += q(i); i += 1 }; p
+        val gt = sums.value(0, grid)
+        val ht = sums.value(1, grid)
+        val scored = (0 until nA).map { i =>
+          val gl = sums.value(2 + 2 * i, grid)
+          val hl = sums.value(3 + 2 * i, grid)
+          val gr = gt - gl; val hr = ht - hl
+          val gain = r10(gl * gl / (hl + lambda) + gr * gr / (hr + lambda) -
+            gt * gt / (ht + lambda))
+          (allowed(i), gain, r10(gl / (hl + lambda)), r10(gr / (hr + lambda)))
+        }
+        val best = scored.minBy { case (k, g, _, _) => (-g, k) }
+        picked :+= ((best._1, best._3, best._4, best._2))
       }
-      bc.destroy()
-      val gt = sums(0).toDouble / grid
-      val ht = sums(1).toDouble / grid
-      val scored = (0 until nA).map { i =>
-        val gl = sums(2 + 2 * i).toDouble / grid
-        val hl = sums(3 + 2 * i).toDouble / grid
-        val gr = gt - gl; val hr = ht - hl
-        val gain = r10(gl * gl / (hl + lambda) + gr * gr / (hr + lambda) -
-          gt * gt / (ht + lambda))
-        (allowed(i), gain, r10(gl / (hl + lambda)), r10(gr / (hr + lambda)))
-      }
-      val best = scored.minBy { case (k, g, _, _) => (-g, k) }
-      picked :+= ((best._1, best._3, best._4, best._2))
-    }
 
-    val acc = {
-      val bc = spark.sparkContext.broadcast(
-        picked.map(p => (p._1, p._2, p._3)).toArray)
-      val nwA = words
-      val (c, t) = arr.mapPartitions { it =>
-        val pk = bc.value
-        var c = 0L; var t = 0L
-        while (it.hasNext) {
-          val ch = it.next(); val m = ch.length / nwA
-          var ri = 0
-          while (ri < m) {
-            val off = ri * nwA
-            var f = f0; var j = 0
-            while (j < pk.length) {
-              val (kj, gl, gr) = pk(j)
-              f += lr * (if (bit(ch, off, kj)) gl else gr)
-              j += 1
-            }
-            if ((f > 0) == bit(ch, off, kC)) c += 1
-            t += 1
-            ri += 1
+      val ct = Rounds.pass(arr, picked.map(p => (p._1, p._2, p._3)).toArray,
+          2) { (pk, ch, a) =>
+        var off = 0
+        while (off < ch.length) {
+          var f = f0; var j = 0
+          while (j < pk.length) {
+            val (kj, gl, gr) = pk(j)
+            f += lr * (if (Rounds.bit(ch, off, kj)) gl else gr)
+            j += 1
           }
+          if ((f > 0) == Rounds.bit(ch, off, kC)) a.add(0, 1L)
+          a.add(1, 1L)
+          off += nw
         }
-        Iterator.single((c, t))
-      }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2))
-      bc.destroy()
-      math.rint(c.toDouble / t.toDouble * 1e6) / 1e6
-    }
-    arr.unpersist(false)
+      }
+      math.rint(ct.long(0).toDouble / ct.long(1).toDouble * 1e6) / 1e6
+    } finally arr.unpersist(false)
 
     val schema = StructType(Seq(
       StructField("round", IntegerType, nullable = false),

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *    Majority; MeanRegressor): the "model" is a small DataFrame of
   *    parameters, prediction is a broadcast join + scalar expressions —
   *    fully distributed, no iteration, oracle-verifiable.
-  *  - MLlib-backed learners (logistic regression, kmeans, PCA, trees…):
-  *    thin adapters in MLlibLearners.
+  *  - iterative learners (k-means, SGD, softmax, boosting): full-batch
+  *    rounds on the [[Rounds]] kernel, oracle-verifiable too.
   *  - evaluation: metric expressions + hash-based k-fold CV.
   */
 object Learners {

@@ -4,7 +4,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 import graft.core.Tables
 
 /** Deterministic Lloyd k-means (reference Orange/clustering/kmeans.py
@@ -12,17 +11,16 @@ import graft.core.Tables
   * deterministic first-k-by-id seeding, the classic MacQueen init, so
   * the whole trajectory is reproducible and oracle-checkable).
   *
-  * Distributed shape: the rounds run in [[rounds]], a kernel planned
-  * ONCE. Catalyst computes each row's features x_j and their grid terms
-  * t_j = [[Tables.scaledLongTerm]](x_j) a single time into a persisted
-  * RDD of per-partition blocks; every round is then ONE
-  * `RDD.aggregate` job over it — per-row argmin assignment plus per-
-  * cluster count and split-radix digit sums, combined map-side — with
-  * no analysis, optimisation, planning or codegen inside the loop (the
-  * shape of MLlib's KMeans). The k×d centroid matrix lives on the
-  * driver and ships in the task closure. No global sort (seeding is a
-  * TakeOrdered top-k), no crossJoin in the rounds, k·(1+3d) longs of
-  * result per partition per round.
+  * Distributed shape: the rounds run in [[rounds]] on the [[Rounds]]
+  * kernel, planned ONCE. Catalyst computes each row's features x_j and
+  * their grid terms t_j = [[Tables.scaledLongTerm]](x_j) a single time
+  * into a persisted chunk cache; every round is then ONE job over it —
+  * per-row argmin assignment plus per-cluster count and exact sums of
+  * t_j, combined map-side — with no analysis, optimisation, planning or
+  * codegen inside the loop (the shape of MLlib's KMeans). The k×d
+  * centroid matrix lives on the driver and ships as a broadcast. No
+  * global sort (seeding is a TakeOrdered top-k), no crossJoin in the
+  * rounds, k·(1+d) slots of result per partition per round.
   *
   * Oracle-exactness: the kernel evaluates the plan it replaced bit for
   * bit. Distances are Σ_j (x_j − c_cj)² added left to right in
@@ -30,56 +28,37 @@ import graft.core.Tables
   * identically); argmin takes the FIRST minimum, so ties break to the
   * lowest cluster; centroid sums are exact integer sums of t_j on the
   * 10⁻¹² grid (order-independent; callers pre-scale features to
-  * |x| ≤ 1), reassembled through [[Tables.scaledLongValue]] into the
-  * double [[Tables.scaledLongSum]] returns; centroids round to 10
+  * |x| ≤ 1), valued by [[Rounds.Acc]] as the double
+  * [[Tables.scaledLongSum]] returns; centroids round to 10
   * decimals per step. The final assignment stays a Catalyst plan:
   * per-cluster inertia reduces through detSum's grid (squared
   * distances exceed the |t| ≤ 1 long-grid envelope). */
 object Lloyd {
 
-  /** One partition of [[rounds]]' points, row-major: x(i·d + j) is row
-    * i's feature j and t(i·d + j) its scaled-long grid term. */
-  private[ml] final class Block(val x: Array[Double], val t: Array[Long])
-    extends Serializable
+  /** The points of `df`'s double columns `xCols` as a [[Rounds]]
+    * double cache of stride 2d: row i's features x_j, then their grid
+    * terms t_j = [[Tables.scaledLongTerm]](x_j), both computed once by
+    * Catalyst (|t| ≤ 10¹² < 2⁵³ inside the |x| ≤ 1 envelope, so t rides
+    * a double exactly). The caller unpersists the result. */
+  private[ml] def points(df: DataFrame, xCols: Seq[String]): RDD[Array[Double]] =
+    Rounds.doubles(df.select(xCols.map(col) ++
+      xCols.map(c => Tables.scaledLongTerm(col(c)).cast("double")): _*))
 
-  /** The points of `df`'s double columns `xCols` as persisted blocks —
-    * features and grid terms both computed once, by Catalyst. The
-    * caller unpersists the result. */
-  private[ml] def points(df: DataFrame, xCols: Seq[String]): RDD[Block] = {
-    val d = xCols.size
-    df.select(xCols.map(col) ++
-        xCols.map(c => Tables.scaledLongTerm(col(c))): _*)
-      .rdd.mapPartitions { rows =>
-        val x = Array.newBuilder[Double]
-        val t = Array.newBuilder[Long]
-        rows.foreach { r =>
-          var j = 0
-          while (j < d) { x += r.getDouble(j); t += r.getLong(d + j); j += 1 }
-        }
-        Iterator.single(new Block(x.result(), t.result()))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** `iterations` Lloyd rounds from `seed` over `pts`, one job each. A
-    * cluster with n members and exact feature sum s moves to
-    * `next(s, n)` per coordinate (callers keep their own rounding); an
-    * empty cluster keeps its centroid. */
-  private[ml] def rounds(pts: RDD[Block], seed: Array[Array[Double]],
+  /** `iterations` Lloyd rounds from `seed` over `pts`, one
+    * [[Rounds.pass]] each. A cluster with n members and exact feature
+    * sum s moves to `next(s, n)` per coordinate (callers keep their own
+    * rounding); an empty cluster keeps its centroid. */
+  private[ml] def rounds(pts: RDD[Array[Double]], seed: Array[Array[Double]],
                          iterations: Int)(
       next: (Double, Long) => Double): Array[Array[Double]] = {
     val k = seed.length
     val d = seed(0).length
-    // per cluster: n, then (Σ t≫42, Σ (t≫21)&M, Σ t&M) per feature —
-    // Tables.scaledLongSum's digits, so sums cannot overflow before
-    // 2⁴² rows per cluster
-    val w = 1 + 3 * d
-    val m = (1L << 21) - 1
+    val w = 1 + d // per cluster: n, then Σ t_j per feature
     var cent = seed
     for (_ <- 1 to iterations) {
-      val cs = cent
-      val acc = pts.aggregate(new Array[Long](k * w))({ (acc, b) =>
+      val acc = Rounds.pass(pts, cent, k * w) { (cs, ch, a) =>
         var o = 0
-        while (o < b.x.length) {
+        while (o < ch.length) {
           var best = 0
           var bestD = 0.0
           var c = 0
@@ -88,36 +67,22 @@ object Lloyd {
             // e₀² + e₁² + … of the Catalyst distance column
             var s = 0.0
             var j = 0
-            while (j < d) { val e = b.x(o + j) - cs(c)(j); s += e * e; j += 1 }
+            while (j < d) { val e = ch(o + j) - cs(c)(j); s += e * e; j += 1 }
             if (c == 0 || s < bestD) { best = c; bestD = s }
             c += 1
           }
           val p = best * w
-          acc(p) += 1
+          a.add(p, 1L)
           var j = 0
-          while (j < d) {
-            val t = b.t(o + j)
-            val q = p + 1 + 3 * j
-            acc(q) += t >> 42
-            acc(q + 1) += (t >> 21) & m
-            acc(q + 2) += t & m
-            j += 1
-          }
-          o += d
+          while (j < d) { a.add(p + 1 + j, ch(o + d + j).toLong); j += 1 }
+          o += 2 * d
         }
-        acc
-      }, { (a, b) =>
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
+      }
+      val cs = cent
       cent = Array.tabulate(k) { c =>
-        val n = acc(c * w)
+        val n = acc.long(c * w)
         if (n == 0) cs(c)
-        else Array.tabulate(d) { j =>
-          val q = c * w + 1 + 3 * j
-          next(Tables.scaledLongValue(acc(q), acc(q + 1), acc(q + 2)), n)
-        }
+        else Array.tabulate(d)(j => next(acc.value(c * w + 1 + j, 1e12), n))
       }
     }
     cent
@@ -143,8 +108,7 @@ object Lloyd {
 
     val pts = points(base, xCols)
     val cent = try {
-      val mx = pts.map(_.x.foldLeft(0.0)((m, v) => math.max(m, math.abs(v))))
-        .fold(0.0)(math.max)
+      val mx = Rounds.envelope(pts, 2 * d, d)._2
       require(mx <= 1.0, s"lloyd envelope: max|x|=$mx (pre-scale)")
       // deterministic seeding: k lowest-id rows (TakeOrdered, no global
       // sort); parquet doubles are identical in both engines

@@ -2,9 +2,6 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.feature.PCA
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.{DenseMatrix, Vector}
 
 /** Manifold / matrix-factorization projections (reference
   * Orange/projection/manifold.py:119 MDS, cur.py:13 CUR).
@@ -1799,24 +1796,5 @@ object Manifold {
        |JOIN pw1_$iters v1 ON v1.i = s.i
        |JOIN pw2_$iters v2 ON v2.i = s.i
        |ORDER BY vec_id""".stripMargin
-  }
-
-  /** CUR column selection: rank embedding dimensions by PCA leverage
-    * scores over the top-k components. */
-  def curLeverage(df: DataFrame, arrayCol: String, k: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val data = df.withColumn("features",
-      array_to_vector(col(arrayCol).cast("array<double>")))
-    val model = new PCA().setK(k).setInputCol("features")
-      .setOutputCol("pca").fit(data)
-    val pc: DenseMatrix = model.pc // nFeatures × k loadings
-    (0 until pc.numRows).map { j =>
-      val lev = (0 until pc.numCols).map(c => {
-        val v = pc(j, c); v * v }).sum
-      (j, math.rint(lev * 1e6) / 1e6)
-    }.sortBy(r => (-r._2, r._1))
-      .zipWithIndex.map { case ((dim, lev), r) => (r + 1, dim, lev) }
-      .toDF("rank", "dimension", "leverage")
   }
 }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
@@ -11,7 +12,8 @@ import graft.core.Tables._
   * Each iteration is ONE distributed aggregation: the loss gradient
   * Σ r(w·x, y)·x reduces map-side, the tiny weight vector lives on the
   * driver — the classic Spark iterative-ML shape (same as MLlib's own
-  * optimizers).
+  * optimizers). Inside the scaled envelope it is one [[Rounds.pass]]
+  * over the [[Rounds]] chunk cache; outside it, a Catalyst aggregate.
   *
   * Oracle-exactness (unusual for an iterative fit): gradients go through
   * order-independent sums and the weights are rounded to 10 decimals
@@ -195,7 +197,7 @@ object SGD {
     // literal weights would force a whole-stage-codegen recompile per
     // step (measured 3 s/iteration vs ~0.3 s with a stable plan)
     // narrow fits cache the columnar projection (iterations re-scan it);
-    // wide fits (k > 8) skip it — their cache is the primitive-array RDD
+    // wide fits (k > 8) skip it — their cache is the Rounds chunk cache
     // below, and materializing a 65-column columnar cache first costs
     // ~10 s at sf0.1 for nothing. Lazy: the gen recompute branch never
     // materializes the full feature projection at all.
@@ -219,74 +221,22 @@ object SGD {
 
     // order-independent gradient sums via SCALED LONGS, not decimals:
     // per-row residual and features are bounded in [−1,1], so
-    // round(t·10¹²) is exact in a double and Σ over ≤8·10⁶ rows fits a
-    // long (8e6·1e12 ≪ 2⁶³) — integer addition is associative
-    // (partition-order free) and whole-stage-codegen fast, where
-    // DECIMAL(38) accumulation measured ~2 s per 600k-row pass.
+    // round(t·10¹²) is exact in a double, and integer addition is
+    // associative (partition-order free) and whole-stage-codegen fast,
+    // where DECIMAL(38) accumulation measured ~2 s per 600k-row pass.
     // The envelope is VERIFIED, not assumed: one pre-pass checks the row
     // count and per-feature |x| bound; outside it, gradients fall back to
     // detSum's DECIMAL(38) accumulation (equally order-independent).
-    // Primitive-array cache for wide fits (k > 8, e.g. RFF kernels):
-    // a single aggregate with k+1 expressions exceeds the codegen field
-    // cap, so HashAggregate silently drops to interpreted per-expression
-    // eval (measured 16 s/iteration at k=64, sf0.1 vs ~0.2 s here).
-    // Math.round (post-JDK-8041734) is EXACT half-up-toward-+inf on the
-    // real value of the double — no floor(t+0.5) double-rounding bump at
-    // 0.49999999999999994 and no ties-to-even drift at |t| ≥ 2^52;
-    // negating for t < 0 gives HALF_UP away from zero, matching Spark
-    // round()'s BigDecimal convention. (Residual divergence class: Spark
-    // rounds the SHORTEST decimal repr, DuckDB ROUND goes through
-    // floating-point ×10^s — a product landing within 1 ulp of an exact
-    // .5 grid line can still split engines; the [0,1] pre-scaling
-    // convention keeps per-term error far below the 1e-12 grid.)
-    def roundScaled(v: Double): Long = {
-      val t = v * 1e12
-      if (t >= 0) Math.round(t) else -Math.round(-t)
-    }
-    // Row.getDouble reads a NULL as 0.0 silently — count nulls while
-    // building the cache so the wide path can VERIFY null-freedom
-    // instead of assuming the caller pre-dropped them (task retries can
-    // only over-count, which errs toward the safe aggregate fallback).
+    // Wide fits (k > 8, e.g. RFF kernels) keep their data in the
+    // [[Rounds]] chunk cache: a single aggregate with k+1 expressions
+    // exceeds the codegen field cap, so HashAggregate silently drops to
+    // interpreted per-expression eval (measured 16 s/iteration at k=64,
+    // sf0.1 vs ~0.2 s here). NULL cells are counted while the cache is
+    // built, so the JVM path VERIFIES null-freedom instead of assuming
+    // the caller pre-dropped them.
     lazy val nullAcc = spark.sparkContext.longAccumulator("graft.sgd.nulls")
-    // Chunked columnar cache: flat primitive chunks of up to 2¹⁶ rows
-    // (row-major, stride k+1; the last chunk per partition is trimmed)
-    // instead of one Array[Double] per row. The per-row form carried
-    // ~32 B of object header + cache-entry overhead on top of the 24 B
-    // payload — at the sf100 rehearsal 600M rows spilled a ~34 GB cache
-    // past the 28.6 GiB store and EVERY epoch re-read the spill (28×
-    // for 10× data); flat chunks hold the same doubles at payload cost
-    // with sequential-scan locality. Rows keep their partition order
-    // and per-row arithmetic, so the gradient sums are bit-identical.
-    def buildChunks(src: DataFrame, stride: Int)
-        : org.apache.spark.rdd.RDD[Array[Double]] = {
-      val acc = nullAcc
-      val st = stride
-      val chunkRows = 1 << 16
-      val r = src.rdd.mapPartitions { rows =>
-        new Iterator[Array[Double]] {
-          def hasNext: Boolean = rows.hasNext
-          def next(): Array[Double] = {
-            val buf = new Array[Double](chunkRows * st)
-            var n = 0
-            while (n < chunkRows && rows.hasNext) {
-              val row = rows.next()
-              val off = n * st
-              var i = 0
-              while (i < st) {
-                if (row.isNullAt(i)) { acc.add(1L); buf(off + i) = 0.0 }
-                else buf(off + i) = row.getDouble(i)
-                i += 1
-              }
-              n += 1
-            }
-            if (n == chunkRows) buf
-            else java.util.Arrays.copyOf(buf, n * st)
-          }
-        }
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      r
-    }
+    val caches = scala.collection.mutable.ArrayBuffer.empty[RDD[Array[Double]]]
+    def cacheOf(src: DataFrame) = { caches += Rounds.doubles(src, nullAcc); caches.last }
     // Gen path: when the EXPANDED feature cache fits the budget, build
     // it straight from the Column expressions — one materialization
     // with the feature math inside the codegen'd scan, byte-identical
@@ -298,13 +248,13 @@ object SGD {
     // pins Column expansion ≡ JVM expansion bit-for-bit, so the branch
     // choice is invisible in results. The branch decision costs one
     // column-pruned count of the (pre-filtered) input.
-    lazy val genCache: (org.apache.spark.rdd.RDD[Array[Double]],
+    lazy val genCache: (RDD[Array[Double]],
                         Option[Array[Double] => Array[Double]]) = {
       val g = genOpt.get
       val maxBytes = spark.conf.getOption("graft.sgd.featCacheMaxBytes")
         .map(_.toLong).getOrElse(defaultFeatCacheMaxBytes)
       if (df.count() * (k + 1) * 8L <= maxBytes)
-        (buildChunks(base, k + 1), None)
+        (cacheOf(base), None)
       else {
         val rawBase = df.select(
           g.raw.zipWithIndex.map { case (c, i) => c.as(s"r_$i") } :+
@@ -312,116 +262,69 @@ object SGD {
         // hand later passes the expansion FUNCTION only — FeatureGen
         // itself holds Columns (not serializable) and must never enter
         // a task closure
-        (buildChunks(rawBase, g.raw.size + 1), Some(g.expandChunk))
+        (cacheOf(rawBase), Some(g.expandChunk))
       }
     }
-    lazy val arrRdd: org.apache.spark.rdd.RDD[Array[Double]] =
-      if (genOpt.isDefined) genCache._1 else buildChunks(base, k + 1)
-    def passExpand: Option[Array[Double] => Array[Double]] =
-      if (genOpt.isDefined) genCache._2 else None
+    lazy val arrRdd: RDD[Array[Double]] =
+      if (genOpt.isDefined) genCache._1 else cacheOf(base)
+    // the feature chunks every JVM pass reads (stride k+1): the cache,
+    // or the per-pass expansion of the gen path's raw cache
+    lazy val chunks: RDD[Array[Double]] =
+      (if (genOpt.isDefined) genCache._2 else None)
+        .fold(arrRdd)(f => arrRdd.map(f))
 
-    // Wide fits also run the envelope pass on the primitive-array cache:
-    // a k+1-field max/abs aggregate pays the same interpreted-eval bill
-    // the wide gradient would (measured ~12 s at k=64/sf0.1 vs ~1 s).
-    // The doubles compared are identical, so the branch decision is too.
-    // Null-freedom comes from the accumulator counted while building
-    // arrRdd (forced by its count()) — a nullable label/feature drops
-    // the fit to the aggregate path whose sums skip nulls correctly.
-    val (nRows, maxAbs, nullFree) =
-      if (k > 8) {
-        val kk = k
-        val ex = passExpand
-        val (n, mx) = arrRdd.mapPartitions { it0 =>
-          val it = ex.fold(it0)(f => it0.map(f))
-          var n = 0L; var mx = 0.0
-          val stride = kk + 1
-          while (it.hasNext) {
-            val ch = it.next(); val m = ch.length / stride
-            n += m
-            var r = 0
-            while (r < m) {
-              val off = r * stride
-              var i = 0
-              while (i < kk) {
-                val a = math.abs(ch(off + i)); if (a > mx) mx = a; i += 1
-              }
-              r += 1
-            }
-          }
-          Iterator.single((n, mx))
-        }.treeReduce((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
-        (n, mx, nullAcc.value == 0L)
-      } else {
-        val preCols = count(lit(1)).as("n") +:
-          (feats.map { case (n, _) => max(abs(col(s"x_$n"))).as(s"m_$n") } ++
-           feats.map { case (n, _) => count(col(s"x_$n")).as(s"c_$n") } :+
-           count(col("y")).as("c_y"))
-        val pre = base.agg(preCols.head, preCols.tail: _*).head()
-        // null max(abs(x)) (empty table / all-null feature) ⇒ outside
-        // envelope
-        val m = (1 to k).map(i =>
-          if (pre.isNullAt(i)) Double.PositiveInfinity else pre.getDouble(i))
-          .foldLeft(0.0)(math.max)
-        val nTot = pre.getLong(0)
-        val nf = (0 to k).forall(i => pre.getLong(k + 1 + i) == nTot)
-        (nTot, m, nf)
-      }
-    // per-TERM envelope only (the r8 AdaBoost lesson, applied here in
-    // round 10 after the sf10 rehearsal found ml_svm_rbf pinned on the
-    // DECIMAL fallback for 30 interpreted passes over 60M rows):
-    // |r·x| ≤ 1 keeps round(t·10¹²) exact in a double at ANY row count;
-    // accumulator overflow — the real reason the old 8·10⁶ row cap
-    // existed — is gone because the JVM path spills its per-partition
-    // longs into BigIntegers and the aggregate path sums the scaled
-    // longs in DECIMAL(38,0) (exact, order-independent). The oracle's
-    // fast branch is already overflow-free (DuckDB SUM(BIGINT)
-    // accumulates in HUGEINT); its env predicate drops the row clause
-    // in lockstep.
-    val scaledSafe = nRows > 0 && maxAbs <= 1.0
-    def gradSum(c: Column): Column =
-      if (scaledSafe)
-        (sum(round(c * 1e12, 0).cast("long").cast("decimal(38,0)"))
-          .cast("double") / lit(1e12)).cast("double")
-      else detSum(c)
-
-    // The JVM gradient accumulates the SAME scaled-long sums
-    // partition-locally (long addition is associative, so it is
-    // partition-order independent exactly like the sum-of-rounded-longs
-    // aggregate; roundScaled matches Spark round()'s HALF_UP away from
-    // zero, and the dot product adds terms before the intercept in the
-    // exact order of the Column expression). Narrow fits use it too —
-    // the per-iteration DataFrame agg costs ~1 s in scheduling/codegen
-    // overhead vs ~0.2 s here — but only when the features are verified
-    // null-free: Row.getDouble reads NULL as 0.0, which would silently
-    // differ from the aggregate path's null-skipping sums.
-    val useJvm = scaledSafe && nullFree
-    // caller outside the JVM envelope with an uncached wide projection:
-    // the DataFrame fallback loop re-scans base per iteration
-    if (k > 8 && !useJvm) base.cache()
-    def gradJvm(w: Array[Double]): Array[Double] = {
-      val kk = k; val ll = loss
-      val ex = passExpand
-      val bw = spark.sparkContext.broadcast(w)
-      // long accumulators with BigInteger spill (AdaBoost's device):
-      // integer addition stays order-independent and the sum exact at
-      // ANY row count — the fixed-point grid, not the row count, is the
-      // envelope
-      val SpillAt = Long.MaxValue >> 1
-      val acc = arrRdd.mapPartitions { it0 =>
-        val it = ex.fold(it0)(f => it0.map(f))
-        val ww = bw.value
-        val a = new Array[Long](kk + 1)
-        val big = Array.fill(kk + 1)(java.math.BigInteger.ZERO)
-        def spill(i: Int): Unit = {
-          big(i) = big(i).add(java.math.BigInteger.valueOf(a(i)))
-          a(i) = 0L
+    try {
+      // Wide fits also run the envelope pass on the chunk cache: a
+      // k+1-field max/abs aggregate pays the same interpreted-eval bill
+      // the wide gradient would (measured ~12 s at k=64/sf0.1 vs ~1 s).
+      // The doubles compared are identical, so the branch decision is
+      // too. The pass builds the cache, and with it the null count — a
+      // nullable label/feature drops the fit to the aggregate path whose
+      // sums skip nulls correctly.
+      val (nRows, maxAbs, nullFree) =
+        if (k > 8) {
+          val (n, mx) = Rounds.envelope(chunks, k + 1, k)
+          (n, mx, nullAcc.value == 0L)
+        } else {
+          val preCols = count(lit(1)).as("n") +:
+            (feats.map { case (n, _) => max(abs(col(s"x_$n"))).as(s"m_$n") } ++
+             feats.map { case (n, _) => count(col(s"x_$n")).as(s"c_$n") } :+
+             count(col("y")).as("c_y"))
+          val pre = base.agg(preCols.head, preCols.tail: _*).head()
+          // null max(abs(x)) (empty table / all-null feature) ⇒ outside
+          // envelope
+          val m = (1 to k).map(i =>
+            if (pre.isNullAt(i)) Double.PositiveInfinity else pre.getDouble(i))
+            .foldLeft(0.0)(math.max)
+          val nTot = pre.getLong(0)
+          val nf = (0 to k).forall(i => pre.getLong(k + 1 + i) == nTot)
+          (nTot, m, nf)
         }
-        val stride = kk + 1
-        while (it.hasNext) {
-          val ch = it.next(); val m = ch.length / stride
-          var rr = 0
-          while (rr < m) {
-            val off = rr * stride
+      // per-TERM envelope only: |r·x| ≤ 1 keeps round(t·10¹²) exact in a
+      // double at ANY row count; the sums cannot overflow (the JVM path's
+      // Rounds.Acc spills into BigInteger, the aggregate path sums in
+      // DECIMAL(38,0), the oracle's SUM(BIGINT) in HUGEINT), so the row
+      // count does not gate the fast branch — on either side.
+      val scaledSafe = nRows > 0 && maxAbs <= 1.0
+      def gradSum(c: Column): Column =
+        if (scaledSafe) scaledLongSum(c) else detSum(c)
+
+      // The JVM gradient accumulates the SAME scaled-long sums (the dot
+      // product adds terms before the intercept in the exact order of
+      // the Column expression). Narrow fits use it too — the
+      // per-iteration DataFrame agg costs ~1 s in scheduling/codegen
+      // overhead vs ~0.2 s here — but only when the features are verified
+      // null-free: Row.getDouble reads NULL as 0.0, which would silently
+      // differ from the aggregate path's null-skipping sums.
+      val useJvm = scaledSafe && nullFree
+      // caller outside the JVM envelope with an uncached wide projection:
+      // the DataFrame fallback loop re-scans base per iteration
+      if (k > 8 && !useJvm) base.cache()
+      def gradJvm(w: Array[Double]): Array[Double] = {
+        val kk = k; val ll = loss
+        val acc = Rounds.pass(chunks, w, k + 1) { (ww, ch, a) =>
+          var off = 0
+          while (off < ch.length) {
             var z = 0.0; var i = 0
             while (i < kk) { z += ch(off + i) * ww(i); i += 1 }
             z += ww(kk)
@@ -429,97 +332,75 @@ object SGD {
             if (r != 0.0) {
               var j = 0
               while (j < kk) {
-                a(j) += roundScaled(r * ch(off + j))
-                if (a(j) > SpillAt || a(j) < -SpillAt) spill(j)
-                j += 1
+                a.add(j, Rounds.roundScaled(r * ch(off + j), 1e12)); j += 1
               }
-              a(kk) += roundScaled(r)
-              if (a(kk) > SpillAt || a(kk) < -SpillAt) spill(kk)
+              a.add(kk, Rounds.roundScaled(r, 1e12))
             }
-            rr += 1
+            off += kk + 1
           }
         }
-        var i = 0
-        while (i <= kk) { spill(i); i += 1 }
-        Iterator.single(big)
-      }.treeReduce { (p, q) =>
-        var i = 0; while (i <= kk) { p(i) = p(i).add(q(i)); i += 1 }; p
+        Array.tabulate(k + 1)(acc.value(_, 1e12))
       }
-      bw.destroy()
-      // bigTotal → correctly-rounded double, then the grid division —
-      // the same two steps as the oracle's Tables.scaledLongSumSql
-      acc.map(_.doubleValue() / 1e12)
-    }
 
-    var w = Array.fill(k + 1)(0.0) // weights + intercept, zero init
-    for (_ <- 1 to iterations if nRows > 0) {
-      val g: Int => Double =
-        if (useJvm) { val a = gradJvm(w); a(_) }
-        else {
-          val withR = base.crossJoin(broadcast(wDF(w)))
-            .select(col("*"),
-              loss.residual(zOf, col("y")).as("r")) // evaluated once per row
-          val aggs = feats.map { case (n, _) =>
-            gradSum(col("r") * col(s"x_$n")) } :+ gradSum(col("r"))
-          val row = withR.agg(aggs.head, aggs.tail: _*).head()
-          row.getDouble(_)
-        }
-      w = w.zipWithIndex.map { case (wi, i) =>
-        math.rint((wi - lr * g(i) / nRows) * 1e10) / 1e10 }
-    }
-    // wide path: sign-accuracy metric on the cached arrays too — the
-    // 65-column crossJoin+agg pays the same interpreted-eval bill as the
-    // gradient did; integer correct-counts are partition-order exact and
-    // the final rounding replicates Spark round()'s HALF_UP.
-    val jvmAccuracy: Option[Double] =
-      if (useJvm && nRows > 0 &&
-          (loss == LogisticLoss || loss == HingeLoss)) {
-        val kk = k; val isLog = loss == LogisticLoss
-        val ex = passExpand
-        val bw = spark.sparkContext.broadcast(w)
-        val (c, t) = arrRdd.mapPartitions { it0 =>
-          val it = ex.fold(it0)(f => it0.map(f))
-          val ww = bw.value; var c = 0L; var t = 0L
-          val stride = kk + 1
-          while (it.hasNext) {
-            val ch = it.next(); val m = ch.length / stride
-            var rr = 0
-            while (rr < m) {
-              val off = rr * stride
+      var w = Array.fill(k + 1)(0.0) // weights + intercept, zero init
+      for (_ <- 1 to iterations if nRows > 0) {
+        val g: Int => Double =
+          if (useJvm) { val a = gradJvm(w); a(_) }
+          else {
+            val withR = base.crossJoin(broadcast(wDF(w)))
+              .select(col("*"),
+                loss.residual(zOf, col("y")).as("r")) // evaluated once per row
+            val aggs = feats.map { case (n, _) =>
+              gradSum(col("r") * col(s"x_$n")) } :+ gradSum(col("r"))
+            val row = withR.agg(aggs.head, aggs.tail: _*).head()
+            row.getDouble(_)
+          }
+        w = w.zipWithIndex.map { case (wi, i) =>
+          math.rint((wi - lr * g(i) / nRows) * 1e10) / 1e10 }
+      }
+      // wide path: sign-accuracy metric on the cached arrays too — the
+      // 65-column crossJoin+agg pays the same interpreted-eval bill as the
+      // gradient did; integer correct-counts are partition-order exact and
+      // the final rounding replicates Spark round()'s HALF_UP.
+      val jvmAccuracy: Option[Double] =
+        if (useJvm && nRows > 0 &&
+            (loss == LogisticLoss || loss == HingeLoss)) {
+          val kk = k; val isLog = loss == LogisticLoss
+          val ct = Rounds.pass(chunks, w, 2) { (ww, ch, a) =>
+            var off = 0
+            while (off < ch.length) {
               var z = 0.0; var i = 0
               while (i < kk) { z += ch(off + i) * ww(i); i += 1 }
               z += ww(kk)
               val pred =
                 if (isLog) { if (1.0 / (1.0 + math.exp(-z)) > 0.5) 1.0 else 0.0 }
                 else { if (z > 0) 1.0 else -1.0 }
-              if (pred == ch(off + kk)) c += 1
-              t += 1
-              rr += 1
+              if (pred == ch(off + kk)) a.add(0, 1L)
+              a.add(1, 1L)
+              off += kk + 1
             }
           }
-          Iterator.single((c, t))
-        }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2))
-        bw.destroy()
-        Some(new java.math.BigDecimal(c.toDouble / t)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
-      } else None
-    if (useJvm || k > 8) arrRdd.unpersist(false) // forced if ever built
-    val outCols = feats.zipWithIndex.map { case ((name, _), i) =>
-      lit(w(i)).as(s"w_$name") } :+
-      lit(w(k)).as("intercept") :+
-      jvmAccuracy.map(a => lit(a))
-        .getOrElse(loss.metric(zOf, col("y"), gradSum, nRows))
-        .as(loss.metricName)
-    val out =
-      if (jvmAccuracy.isDefined) // constants only — no data pass needed
-        base.limit(1).crossJoin(broadcast(wDF(w)))
+          Some(new java.math.BigDecimal(ct.long(0).toDouble / ct.long(1))
+            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+        } else None
+      val outCols = feats.zipWithIndex.map { case ((name, _), i) =>
+        lit(w(i)).as(s"w_$name") } :+
+        lit(w(k)).as("intercept") :+
+        jvmAccuracy.map(a => lit(a))
+          .getOrElse(loss.metric(zOf, col("y"), gradSum, nRows))
+          .as(loss.metricName)
+      val out =
+        if (jvmAccuracy.isDefined) // constants only — no data pass needed
+          base.limit(1).crossJoin(broadcast(wDF(w)))
+            .agg(outCols.head, outCols.tail: _*)
+        else base.crossJoin(broadcast(wDF(w)))
           .agg(outCols.head, outCols.tail: _*)
-      else base.crossJoin(broadcast(wDF(w)))
-        .agg(outCols.head, outCols.tail: _*)
-    val result = out.collect()
-    base.unpersist()
-    spark.createDataFrame(
-      java.util.Arrays.asList(result: _*), out.schema)
+      spark.createDataFrame(
+        java.util.Arrays.asList(out.collect(): _*), out.schema)
+    } finally {
+      caches.foreach(_.unpersist(false))
+      base.unpersist()
+    }
   }
 
   /** DuckDB twin of [[linearGD]]: iterations unrolled as chained CTEs.

@@ -13,14 +13,14 @@ import graft.core.Tables._
   *   grad = Xᵀ(P − Y)/n + λ·θ/n      (bias column regularized too,
   * exactly like the reference's hstack-ones + full-θ L2).
   *
-  * Distributed shape: per iteration ONE scan — the C·(k+1) gradient
-  * sums accumulate partition-locally into a primitive long array
-  * (the scaled-long grid of SGD.scala; a 90-expression HashAggregate
-  * would fall out of whole-stage codegen), then treeReduce. The θ
-  * matrix is tiny and lives on the driver.
+  * Distributed shape: per iteration ONE [[Rounds.pass]] over the
+  * [[Rounds]] chunk cache — the C·(k+1) gradient sums accumulate
+  * partition-locally into exact slots (a 90-expression HashAggregate
+  * would fall out of whole-stage codegen). The θ matrix is tiny and
+  * lives on the driver.
   *
-  * Oracle-exactness (same device as SGD.linearGD): per-term gradients
-  * round to the 1e-12 scaled-long grid (order-independent integer
+  * Oracle-exactness: per-term gradients round to the 1e-12 scaled-long
+  * grid ([[Rounds.roundScaled]]; exact, order-independent integer
   * sums), θ rounds to 10 decimals after every step, and the softmax
   * probabilities divide exp(z_c) by a FIXED class-order sum, so Spark
   * and the SQL-unrolled DuckDB twin walk the same trajectory. The
@@ -39,97 +39,31 @@ object Softmax {
     val c = numClasses
     val base = df.select(
       feats.map { case (n, f) => f.cast("double").as(s"x_$n") } :+
-        y.cast("double").as("y"): _*).na.drop()
+        y.cast("double").as("y"): _*)
+    // rows with a NULL/NaN are dropped while chunking (na.drop()'s rule):
+    // a Catalyst na.drop() re-evaluates every projected feature in its
+    // filter, and on ml_mlp_embeddings' 16 softsign features that stage
+    // outgrew janino's 64 KB method limit and fell out of codegen
+    val arrRdd = Rounds.doubles(base, dropNa = true)
+    val (theta, sup, prd, correct, nD) = try {
+      val (n, maxAbs) = Rounds.envelope(arrRdd, k + 1, k)
+      require(n > 0, "softmax fit on empty input")
+      // per-TERM envelope only: |r·x| ≤ 1 keeps round(t·10¹²) exact at
+      // ANY n (the sums are exact Rounds.Acc slots) — softmax callers
+      // pre-scale, so enforce just the magnitude bound
+      require(maxAbs <= 1.0,
+        s"softmax envelope: maxAbs=$maxAbs (pre-scale features to [-1,1])")
 
-    // Chunked columnar cache (lockstep with SGD.linearGD round-10):
-    // flat primitive chunks of up to 2¹⁶ rows (row-major, stride k+1)
-    // instead of one Array[Double] per row — same doubles at payload
-    // cost, no per-row object headers, so multi-epoch caches stay
-    // memory-resident at 10⁸⁺ rows. Row order and per-row arithmetic
-    // are unchanged: the gradient sums are bit-identical.
-    val arrRdd = {
-      val kk = k
-      val stride = kk + 1
-      val chunkRows = 1 << 16
-      base.rdd.mapPartitions { rows =>
-        new Iterator[Array[Double]] {
-          def hasNext: Boolean = rows.hasNext
-          def next(): Array[Double] = {
-            val buf = new Array[Double](chunkRows * stride)
-            var n = 0
-            while (n < chunkRows && rows.hasNext) {
-              val row = rows.next()
-              val off = n * stride
-              var i = 0
-              while (i < stride) { buf(off + i) = row.getDouble(i); i += 1 }
-              n += 1
-            }
-            if (n == chunkRows) buf
-            else java.util.Arrays.copyOf(buf, n * stride)
-          }
-        }
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    val (n, maxAbs) = {
-      val kk = k
-      arrRdd.mapPartitions { it =>
-        var n = 0L; var mx = 0.0
-        val stride = kk + 1
-        while (it.hasNext) {
-          val ch = it.next(); val m = ch.length / stride
-          n += m
-          var r = 0
-          while (r < m) {
-            val off = r * stride
-            var i = 0
-            while (i < kk) {
-              val v = math.abs(ch(off + i)); if (v > mx) mx = v; i += 1
-            }
-            r += 1
-          }
-        }
-        Iterator.single((n, mx))
-      }.treeReduce((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
-    }
-    require(n > 0, "softmax fit on empty input")
-    // per-TERM envelope only (lockstep with SGD.linearGD round-10):
-    // |r·x| ≤ 1 keeps round(t·10¹²) exact at ANY n; accumulator
-    // overflow is handled by the BigInteger spill below, and the
-    // oracle's HUGEINT SUM is overflow-free — softmax callers
-    // pre-scale, so enforce just the magnitude bound
-    require(maxAbs <= 1.0,
-      s"softmax envelope: maxAbs=$maxAbs (pre-scale features to [-1,1])")
-
-    def roundScaled(v: Double): Long = {
-      val t = v * 1e12
-      if (t >= 0) Math.round(t) else -Math.round(-t)
-    }
-
-    // θ[c][j], j = 0..k-1 weights, j = k intercept
-    var theta = Array.fill(c, k + 1)(0.0)
-    val nD = n.toDouble
-    for (_ <- 1 to iterations) {
-      val bw = spark.sparkContext.broadcast(theta)
+      // θ[c][j], j = 0..k-1 weights, j = k intercept
+      var theta = Array.fill(c, k + 1)(0.0)
+      val nD = n.toDouble
       val kk = k; val cc = c
-      // long accumulators with BigInteger spill (SGD/AdaBoost device):
-      // exact at any row count, order-independent
-      val SpillAt = Long.MaxValue >> 1
-      val g = arrRdd.mapPartitions { it =>
-        val th = bw.value
-        val acc = new Array[Long](cc * (kk + 1))
-        val big = Array.fill(cc * (kk + 1))(java.math.BigInteger.ZERO)
-        def spill(i: Int): Unit = {
-          big(i) = big(i).add(java.math.BigInteger.valueOf(acc(i)))
-          acc(i) = 0L
-        }
-        val z = new Array[Double](cc)
-        val e = new Array[Double](cc)
-        val stride = kk + 1
-        while (it.hasNext) {
-          val ch = it.next(); val m = ch.length / stride
-          var rr = 0
-          while (rr < m) {
-            val off = rr * stride
+      for (_ <- 1 to iterations) {
+        val g = Rounds.pass(arrRdd, theta, c * (k + 1)) { (th, ch, a) =>
+          val z = new Array[Double](cc)
+          val e = new Array[Double](cc)
+          var off = 0
+          while (off < ch.length) {
             val yi = ch(off + kk).toInt
             var ci = 0
             while (ci < cc) {
@@ -148,72 +82,46 @@ object Softmax {
               val r = e(ci) / se - (if (yi == ci) 1.0 else 0.0)
               var j = 0
               while (j < kk) {
-                val ix = ci * (kk + 1) + j
-                acc(ix) += roundScaled(r * ch(off + j))
-                if (acc(ix) > SpillAt || acc(ix) < -SpillAt) spill(ix)
+                a.add(ci * (kk + 1) + j, Rounds.roundScaled(r * ch(off + j), 1e12))
                 j += 1
               }
-              val ib = ci * (kk + 1) + kk
-              acc(ib) += roundScaled(r)
-              if (acc(ib) > SpillAt || acc(ib) < -SpillAt) spill(ib)
+              a.add(ci * (kk + 1) + kk, Rounds.roundScaled(r, 1e12))
               ci += 1
             }
-            rr += 1
+            off += kk + 1
           }
         }
-        var i = 0
-        while (i < acc.length) { spill(i); i += 1 }
-        Iterator.single(big)
-      }.treeReduce { (a, b) =>
-        var i = 0; while (i < a.length) { a(i) = a(i).add(b(i)); i += 1 }; a
+        val prev = theta
+        theta = Array.tabulate(c, k + 1) { (ci, j) =>
+          val gs = g.value(ci * (k + 1) + j, 1e12)
+          math.rint((prev(ci)(j) - lr * (gs / nD + lambda * prev(ci)(j) / nD)) * 1e10) / 1e10
+        }
       }
-      bw.destroy()
-      theta = Array.tabulate(c, k + 1) { (ci, j) =>
-        val gs = g(ci * (k + 1) + j).doubleValue() / 1e12
-        math.rint((theta(ci)(j) - lr * (gs / nD + lambda * theta(ci)(j) / nD)) * 1e10) / 1e10
-      }
-    }
 
-    // final pass: per-class supports + argmax-on-z predictions + accuracy
-    val (sup, prd, correct) = {
-      val bw = spark.sparkContext.broadcast(theta)
-      val kk = k; val cc = c
-      val res = arrRdd.mapPartitions { it =>
-        val th = bw.value
-        val s = new Array[Long](cc); val p = new Array[Long](cc)
-        var ok = 0L
-        val stride = kk + 1
-        while (it.hasNext) {
-          val ch = it.next(); val m = ch.length / stride
-          var rr = 0
-          while (rr < m) {
-            val off = rr * stride
-            val yi = ch(off + kk).toInt
-            var best = 0; var bestZ = Double.NegativeInfinity
-            var ci = 0
-            while (ci < cc) {
-              val t = th(ci)
-              var z = 0.0; var j = 0
-              while (j < kk) { z += ch(off + j) * t(j); j += 1 }
-              z += t(kk)
-              if (z > bestZ) { bestZ = z; best = ci }
-              ci += 1
-            }
-            s(yi) += 1; p(best) += 1
-            if (best == yi) ok += 1
-            rr += 1
+      // final pass: per-class supports + argmax-on-z predictions + accuracy
+      val res = Rounds.pass(arrRdd, theta, 2 * c + 1) { (th, ch, a) =>
+        var off = 0
+        while (off < ch.length) {
+          val yi = ch(off + kk).toInt
+          require(yi >= 0 && yi < cc, s"softmax label $yi outside [0, $cc)")
+          var best = 0; var bestZ = Double.NegativeInfinity
+          var ci = 0
+          while (ci < cc) {
+            val t = th(ci)
+            var z = 0.0; var j = 0
+            while (j < kk) { z += ch(off + j) * t(j); j += 1 }
+            z += t(kk)
+            if (z > bestZ) { bestZ = z; best = ci }
+            ci += 1
           }
+          a.add(yi, 1L); a.add(cc + best, 1L)
+          if (best == yi) a.add(2 * cc, 1L)
+          off += kk + 1
         }
-        Iterator.single((s, p, ok))
-      }.treeReduce { (a, b) =>
-        var i = 0
-        while (i < cc) { a._1(i) += b._1(i); a._2(i) += b._2(i); i += 1 }
-        (a._1, a._2, a._3 + b._3)
       }
-      bw.destroy()
-      res
-    }
-    arrRdd.unpersist(false)
+      (theta, Array.tabulate(c)(res.long), Array.tabulate(c)(i => res.long(c + i)),
+        res.long(2 * c), nD)
+    } finally arrRdd.unpersist(false)
     val acc6 = new java.math.BigDecimal(correct.toDouble / nD)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 

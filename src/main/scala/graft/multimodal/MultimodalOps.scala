@@ -155,12 +155,6 @@ object MultimodalOps {
       .toDF("media_id", "width", "height", "n_frames", "n_bytes")
   }
 
-  /** Frame sampling plan for video-like payloads: every k-th frame index
-    * up to n_frames — pure expressions over the decoded metadata. */
-  def sampleFrameIndexes(decoded: DataFrame, everyK: Int): DataFrame =
-    decoded.withColumn("frame_idx",
-      explode(sequence(lit(0), greatest(col("n_frames") - 1, lit(0)), lit(everyK))))
-
   /** Resize pass: (payload, target box) → resized payload + new dims,
     * aspect-preserving fit. PNG/JPEG payloads go through the REAL
     * pipeline — bounded pixel decode, integer nearest-neighbor scale,

@@ -34,7 +34,6 @@ object GroupByOps {
   def medianExact(c: Column): Column        = round(percentile(c, lit(0.5)), 6)
   def q1Exact(c: Column): Column            = round(percentile(c, lit(0.25)), 6)
   def q3Exact(c: Column): Column            = round(percentile(c, lit(0.75)), 6)
-  def medianApprox(c: Column): Column       = percentile_approx(c, lit(0.5), lit(10000))
   def minAgg(c: Column): Column             = min(c)
   def maxAgg(c: Column): Column             = max(c)
   def stdExact(c: Column): Column           = exactStdSampFast(c, sqFast = false)
@@ -60,9 +59,6 @@ object GroupByOps {
   /** "Random value" with a fixed seed: the value whose md5(key) is
     * smallest — deterministic, uniform-ish, single-pass. */
   def seededRandomValue(c: Column, key: Column): Column = min_by(c, md5(key))
-
-  /** Native approximate mode for the scale path. */
-  def modeApprox(c: Column): Column = mode(c)
 
   /** Deterministic mode: most frequent value of `valueCol` per group, ties
     * broken by smallest value. Needs a count sub-aggregation: groupBy

@@ -27,10 +27,6 @@ object MergeOps {
   def mergeLeft(left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame =
     left.join(right, keys, "left_outer")
 
-  /** "Find matching rows (inner)" — owmergedata.py:574-580. */
-  def mergeInner(left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame =
-    left.join(right, keys, "inner")
-
   /** "Concatenate tables, merge rows (full outer)" — owmergedata.py:582-592. */
   def mergeOuter(left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame =
     left.join(right, keys, "full_outer")

@@ -23,12 +23,6 @@ object ReshapeOps {
     tagged.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Domain-*intersection* concatenation: only columns common to all inputs. */
-  def concatIntersection(dfs: Seq[DataFrame]): DataFrame = {
-    val common = dfs.map(_.columns.toSet).reduce(_ intersect _).toSeq.sorted
-    dfs.map(_.select(common.map(col): _*)).reduce(_.union(_))
-  }
-
   sealed trait KeepWhich
   object KeepWhich {
     case object First extends KeepWhich;  case object Last extends KeepWhich

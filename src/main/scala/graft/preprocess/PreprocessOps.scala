@@ -135,11 +135,6 @@ object PreprocessOps {
   /** FixedTimeWidth (discretize.py:272): truncate timestamps to a unit. */
   def timeBin(c: Column, unit: String): Column = date_trunc(unit, c)
 
-  /** Tumbling numeric-epoch window (also the batch twin of the streaming
-    * op): bucket start in epoch seconds. */
-  def epochBucket(ts: Column, seconds: Int): Column =
-    (floor(unix_timestamp(ts) / seconds) * seconds).cast("long")
-
   // --- Continuize (continuize.py:11-100) ---------------------------------
 
   /** One-hot indicators for an enumerated value list (Indicators

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.core.Tables
 import graft.core.Tables._
 import graft.queries.SqlGen._
@@ -14,26 +13,6 @@ object ExtraQueries {
 
   private def li(s: SparkSession, d: String) = Tables.load(s, d, "lineitem")
   private def cust(s: SparkSession, d: String) = Tables.load(s, d, "customer")
-
-  /** Deterministic per-feature info gain vs a target, all contingencies in
-    * per-feature aggregations, entropy terms summed order-independently. */
-  private def infoGainFor(df: DataFrame, feature: String, target: String) = {
-    val detSum = (c: org.apache.spark.sql.Column) =>
-      sum(round(c, 12).cast(DecimalType(38, 14))).cast(DoubleType)
-    val cont = df.groupBy(col(feature).as("f"), col(target).as("c"))
-      .agg(count(lit(1)).as("n"))
-    val tot = cont.agg(sum("n").as("total"))
-    val byF = cont.groupBy(col("f")).agg(sum("n").as("nf"))
-    val byC = cont.groupBy(col("c")).agg(sum("n").as("nc"))
-    val hC = byC.crossJoin(tot).agg(
-      detSum(-(col("nc") / col("total")) * log2(col("nc") / col("total"))).as("h_class"))
-    val hCond = cont.join(byF, "f").crossJoin(tot).agg(
-      detSum((col("nf") / col("total")) *
-        (-(col("n") / col("nf")) * log2(col("n") / col("nf")))).as("h_cond"))
-    hC.crossJoin(hCond)
-      .select(lit(feature).as("feature"),
-        round(col("h_class") - col("h_cond"), 6).as("info_gain"))
-  }
 
   val all: Seq[Q] = Seq(
 

@@ -75,7 +75,8 @@ object BpeOps {
     * artifact a tokenizer ships. Stops early if no pair remains. */
   def trainBpe(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
-    val (merges, _) = trainLoop(docs, textCol, rounds)
+    val (merges, words) = trainLoop(docs, textCol, rounds)
+    graft.core.Tables.unpersistLocalCheckpoint(words)
     spark.createDataFrame(merges)
       .toDF("round", "pair_a", "pair_b", "merged", "n_occ")
   }
@@ -109,21 +110,26 @@ object BpeOps {
     * runs over the distinct-word table only, batched 64 replaces per
     * projection with a lineage checkpoint between batches so a 30k-merge
     * production vocabulary keeps both plan depth and expression depth
-    * bounded. */
+    * bounded. The returned frame reads the last batch checkpoint (none
+    * for ≤ 64 merges). */
   def applyBpe(docs: DataFrame, textCol: String,
                merges: Seq[(String, String)]): DataFrame = {
     var words = bpeWordTable(docs, textCol)
-    merges.grouped(64).foreach { grp =>
+    var ckpt: DataFrame = null
+    merges.grouped(64).zipWithIndex.foreach { case (grp, i) =>
       val chained = grp.foldLeft(col("syms")) { case (c, (a, b)) =>
         replace(c, lit(SEP + a + SEP + SEP + b + SEP),
           lit(SEP + a + b + SEP))
       }
-      val prev = words
+      if (i > 0) {
+        // the previous batch's output, checkpointed; frees the
+        // superseded batch checkpoint it was computed from
+        val c = words.localCheckpoint()
+        if (ckpt != null) graft.core.Tables.unpersistLocalCheckpoint(ckpt)
+        ckpt = c
+        words = c
+      }
       words = words.select(col("n"), chained.as("syms"))
-        .localCheckpoint()
-      // no-op on the first (un-checkpointed) frame, frees every
-      // superseded batch checkpoint after
-      graft.core.Tables.unpersistLocalCheckpoint(prev)
     }
     words.select(col("n"),
         explode(split(trim(col("syms"), SEP), SEP + SEP)).as("token"))
@@ -136,7 +142,8 @@ object BpeOps {
     * with [[applyBpe]]. */
   def tokenizeWith(train: DataFrame, apply: DataFrame, textCol: String,
                    rounds: Int): DataFrame = {
-    val (merges, _) = trainLoop(train, textCol, rounds)
+    val (merges, words) = trainLoop(train, textCol, rounds)
+    graft.core.Tables.unpersistLocalCheckpoint(words)
     applyBpe(apply, textCol, merges.map(m => (m._2, m._3)))
   }
 

@@ -33,11 +33,6 @@ object TextOps {
   def meanTokenLen(text: Column): Column =
     length(regexp_replace(text, " ", "")).cast("double") / nTokens(text)
 
-  /** Ratio of non [a-z0-9 ] characters — punctuation/noise signal. */
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[^a-z0-9 ]", "")))
-      .cast("double") / length(text)
-
   /** Default English stopword sample (public, tiny). */
   val StopwordsEn: Seq[String] =
     Seq("the", "a", "and", "of", "to", "in", "is", "it", "that", "for")
@@ -75,9 +70,6 @@ object TextOps {
     "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "los"),
     "fr" -> Seq("le", "la", "les", "des", "est", "et", "dans", "une"),
     "zh" -> Seq("的", "是", "不", "我", "了", "人", "在", "有"))
-
-  def langScore(text: Column, markers: Seq[String]): Column =
-    size(filter(tokens(text), t => markers.map(m => t === m).reduce(_ || _)))
 
   /** ONE-pass per-language marker counts over a PROJECTED token array:
     * a single interpreted fold carries all five counters in one struct,

@@ -83,6 +83,19 @@ class BpeSpec extends SparkSpec {
     assert(chars == Map("a" -> 1L, "b" -> 2L))
   }
 
+  test("trainBpe and tokenizeWith leave no persisted RDD behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val m = BpeOps.trainBpe(corpus("aaab aaab ab"), "text", rounds = 4)
+    assert(sc.getPersistentRDDs.keySet == before)
+    m.collect()
+    val t = BpeOps.tokenizeWith(
+      corpus("aaab aaab ab"), corpus("aab aab b"), "text", rounds = 4)
+    assert(sc.getPersistentRDDs.keySet == before)
+    t.collect()
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("incremental pair statistics: long runs extend short runs exactly") {
     // the delta-recount keeps the counts table equal to a full recount
     // at every round, so training r rounds must be a strict prefix of

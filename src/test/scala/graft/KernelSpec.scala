@@ -136,16 +136,26 @@ class KernelSpec extends SparkSpec {
         own ++ p.children.flatMap(kernelProjects(_, kernel, inStage))
     }
 
-  test("iforest and minhash kernels compile inside whole-stage codegen") {
-    // with fallback off, a Janino rejection of a kernel's generated code
-    // fails the action instead of silently running the interpreted plan
+  /** Runs `body` with codegen fallback off: a Janino rejection of a
+    * stage's generated code then fails the action instead of silently
+    * running the interpreted plan. */
+  private def withoutCodegenFallback(body: => Unit): Unit = {
     val key = "spark.sql.codegen.fallback"
     val before = spark.conf.getOption(key)
     spark.conf.set(key, "false")
     try {
       // a plan cached by an earlier test would serve the rows without
-      // compiling the kernel
+      // compiling the stage
       spark.catalog.clearCache()
+      body
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("iforest and minhash kernels compile inside whole-stage codegen") {
+    withoutCodegenFallback {
       val scored = graft.ml.IsolationForest.scoreColumn(
         graft.core.Tables.load(spark, sf, "lineitem"),
         Seq("l_quantity", "l_extendedprice"), Seq("l_orderkey", "l_linenumber"),
@@ -161,9 +171,20 @@ class KernelSpec extends SparkSpec {
         assert(spans.nonEmpty && spans.forall(identity),
           s"${kernel.getSimpleName} outside whole-stage codegen:\n$plan")
       }
-    } finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("the softsign softmax input scan compiles inside whole-stage codegen") {
+    // ml_mlp_embeddings' fit: 16 softsign features of 16 embedding
+    // coordinates, each projected once into the chunk cache
+    withoutCodegenFallback {
+      val feats = graft.ml.KernelSVM.softsignFeatures(
+        (0 until 16).map(i => element_at(col("embedding"), i + 1).cast("double")),
+        16, 1.0).zipWithIndex.map { case (f, j) => (s"z$j", f) }
+      val out = graft.ml.Softmax.fit(
+        graft.core.Tables.load(spark, sf, "embeddings"), feats, col("label"),
+        numClasses = 10, iterations = 1, lr = 10.0, lambda = 1.0)
+      assert(out.collect().length == 10)
     }
   }
 }

@@ -145,13 +145,14 @@ class LearnerTailSpec extends SparkSpec {
   }
 
   test("softmax regression separates the embedding labels better than chance") {
+    // ml_softmax_regression's fit: 16 embedding coordinates, 10 classes
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val conf = graft.ml.MLlibLearners.softmaxOnEmbeddings(e, "embedding", "label")
-      .as[(Double, Double, Long)].collect()
-    val n = conf.map(_._3).sum.toDouble
-    val correct = conf.filter(r => r._1 == r._2).map(_._3).sum.toDouble
-    val nClasses = conf.map(_._1).distinct.length
-    assert(correct / n > 1.5 / nClasses,
-      s"training accuracy ${correct / n} not above chance")
+    val rows = graft.ml.Softmax.fit(e,
+      (0 until 16).map(i =>
+        (s"e$i", element_at(col("embedding"), i + 1).cast("double"))),
+      col("label"), numClasses = 10, iterations = 20, lr = 10.0,
+      lambda = 1.0).collect()
+    val acc = rows.head.getAs[Double]("accuracy")
+    assert(acc > 1.5 / rows.length, s"training accuracy $acc not above chance")
   }
 }

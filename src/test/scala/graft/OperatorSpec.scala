@@ -22,27 +22,10 @@ class OperatorSpec extends SparkSpec {
     assert(n1 == n2 && n1 > 0)
   }
 
-  // values chosen so the scaled longs exercise all three radix-2²¹
-  // digits, both signs, the ±1e6 magnitude edge (|x| ≈ 2⁶⁰), zero,
-  // sub-digit values, and a group whose long sum would wrap 2⁶³ (eight
-  // near-max terms)
-  private def adversarial = {
-    import spark.implicits._
-    Seq(
-      ("g1", 1e6), ("g1", -1e6), ("g1", 0.0), ("g1", 1e-12),
-      ("g1", -3.5e-7), ("g1", 123456.789012), ("g2", 9.0e5),
-      ("g2", 9.0e5), ("g2", 9.0e5), ("g2", 9.0e5), ("g2", 9.0e5),
-      ("g2", 9.0e5), ("g2", 9.0e5), ("g2", 9.0e5), // Σ·10¹² = 7.2e18 > 2⁶³
-      ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5),
-      ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5),
-      ("g4", 2.0e-6), ("g4", -1.0e-6), ("g5", 0.3), ("g5", 1.0 / 3),
-      ("g5", 0.7), ("g5", 2.0 / 3)).toDF("g", "v")
-  }
-
   test("scaledLongSum ≡ DECIMAL(38,0) sum on adversarial magnitudes and signs") {
     // the device must match the exact decimal sum bit-for-bit in every
     // group
-    val vals = adversarial
+    val vals = OperatorSpec.adversarial(spark)
     val dec = (sum(round(col("v") * lit(1e12), 0).cast("long")
       .cast("decimal(38,0)")).cast("double") / lit(1e12)).cast("double")
     val got = vals.groupBy("g")
@@ -58,26 +41,6 @@ class OperatorSpec extends SparkSpec {
     val empty = vals.filter(col("g") === "nope")
       .agg(Tables.scaledLongSum(col("v")).as("s")).collect()
     assert(empty.head.isNullAt(0))
-  }
-
-  test("scaledLongValue reassembles scaledLongSum's double from the terms") {
-    val vals = adversarial
-    val m = (1L << 21) - 1
-    val driver = vals.select(col("g"), Tables.scaledLongTerm(col("v")))
-      .collect().groupBy(_.getString(0)).map { case (g, rs) =>
-        val ts = rs.map(_.getLong(1))
-        g -> Tables.scaledLongValue(ts.map(_ >> 42).sum,
-          ts.map(t => (t >> 21) & m).sum, ts.map(_ & m).sum)
-      }
-    val got = vals.groupBy("g").agg(Tables.scaledLongSum(col("v")))
-      .collect()
-    assert(got.length == driver.size)
-    got.foreach { r =>
-      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
-        java.lang.Double.doubleToRawLongBits(driver(r.getString(0))),
-        s"group ${r.getString(0)}: catalyst=${r.getDouble(1)} " +
-          s"driver=${driver(r.getString(0))}")
-    }
   }
 
   test("agg17 produces one row per group with all 18 columns") {
@@ -234,5 +197,24 @@ class OperatorSpec extends SparkSpec {
       .orderBy(col("event_type"), col("event_id")).collect().toSeq
     assert(plain.nonEmpty)
     assert(plain == chunked)
+  }
+}
+
+object OperatorSpec {
+  // values chosen so the scaled longs exercise all three radix-2²¹
+  // digits, both signs, the ±1e6 magnitude edge (|x| ≈ 2⁶⁰), zero,
+  // sub-digit values, and a group whose long sum would wrap 2⁶³ (eight
+  // near-max terms)
+  def adversarial(spark: org.apache.spark.sql.SparkSession) = {
+    import spark.implicits._
+    Seq(
+      ("g1", 1e6), ("g1", -1e6), ("g1", 0.0), ("g1", 1e-12),
+      ("g1", -3.5e-7), ("g1", 123456.789012), ("g2", 9.0e5),
+      ("g2", 9.0e5), ("g2", 9.0e5), ("g2", 9.0e5), ("g2", 9.0e5),
+      ("g2", 9.0e5), ("g2", 9.0e5), ("g2", 9.0e5), // Σ·10¹² = 7.2e18 > 2⁶³
+      ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5),
+      ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5),
+      ("g4", 2.0e-6), ("g4", -1.0e-6), ("g5", 0.3), ("g5", 1.0 / 3),
+      ("g5", 0.7), ("g5", 2.0 / 3)).toDF("g", "v")
   }
 }
