@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.core.Tables._
 
 /** Row/state types for StreamOps.statefulUserStats — top-level (not
@@ -32,22 +32,45 @@ object StreamOps {
 
   /** State partitions for the fixture-driven runs. Streaming stateful
     * operators create one state store per shuffle partition per
-    * operator, and store open/commit latency dominates small
-    * single-trigger drains (the batch default of 32 spends more wall
-    * time on store lifecycle than on rows). Real deployments size state
-    * partitions to load; these drives do the same. Results are
-    * partition-count-invariant. */
+    * operator, and every store writes its own delta and checksum files
+    * on each commit, so a small single-trigger drain pays per store, not
+    * per row (the batch default of 32 writes four times the store files
+    * of 8). Without Hadoop's native library each checkpoint or state
+    * file also cost a forked `chmod`: 60 per drain of
+    * [[statefulUserStats]], counted with a logging `chmod` first on the
+    * JVM's PATH. [[LocalCheckpointFileManager]] removes those forks.
+    * Real deployments size state partitions to load; these drives do the
+    * same. Results are partition-count-invariant. */
   private[graft] val StatePartitions = 8
 
-  /** Start a streaming query with [[StatePartitions]] state partitions
-    * (the conf is captured by the query's cloned session at start, then
-    * restored), drain it, and stop it. */
-  private def runDrained(spark: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, StatePartitions.toString)
-    val q = try start finally spark.conf.set(key, old)
+  /** The settings every drained query starts under. */
+  private val StreamConf = Seq(
+    "spark.sql.shuffle.partitions" -> StatePartitions.toString,
+    LocalCheckpointFileManager.ClassKey ->
+      classOf[LocalCheckpointFileManager].getName)
+
+  /** Start a streaming query with `spark.sql.shuffle.partitions` =
+    * [[StatePartitions]] and `spark.sql.streaming.checkpointFileManagerClass`
+    * = [[LocalCheckpointFileManager]]. The query's cloned session captures
+    * both at start, so its metadata logs and every state store see them;
+    * the caller's session gets its own values back, set or unset as they
+    * were. Every stream in this object starts here. */
+  private def startStream(spark: SparkSession)(
+      start: => StreamingQuery): StreamingQuery = {
+    val explicit = spark.conf.getAll
+    val saved = StreamConf.map { case (k, _) => k -> explicit.get(k) }
+    StreamConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try start finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Start the query under [[startStream]]'s two settings (the
+    * shuffle-partition count and the checkpoint-file manager class),
+    * drain all available input, and stop it. */
+  private def runDrained(spark: SparkSession)(start: => StreamingQuery): Unit = {
+    val q = startStream(spark)(start)
     try q.processAllAvailable() finally q.stop()
   }
 
@@ -103,43 +126,39 @@ object StreamOps {
     val src = s"$sfDir/events.parquet"
     val schema = spark.read.parquet(src).schema
     val dir = java.nio.file.Files.createTempDirectory("graft_sess_")
-    dir.toFile.deleteOnExit()
-    java.nio.file.Files.copy(java.nio.file.Paths.get(src),
-      dir.resolve("batch0.parquet"))
-    val stream = tsNanos(spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet").parquet(dir.toString))
-      .withColumn("ts", timestamp_seconds(expr("ts div 1000000000")))
-      .withWatermark("ts", "1 hour")
-      .groupBy(col("user_id"),
-        session_window(col("ts"), s"$gapSeconds seconds"))
-      .agg(count(lit(1)).as("n_events"),
-        unix_timestamp(min(col("ts"))).as("start_s"),
-        unix_timestamp(max(col("ts"))).as("end_s"))
-      .select(col("user_id"), col("n_events"), col("start_s"), col("end_s"))
-    val q = {
-      val key = "spark.sql.shuffle.partitions"
-      val oldParts = spark.conf.get(key)
-      spark.conf.set(key, StatePartitions.toString)
-      try stream.writeStream
-        .format("memory").queryName(sinkName).outputMode("append").start()
-      finally spark.conf.set(key, oldParts)
-    }
+    // the result is read from the memory sink, never from `dir`
     try {
-      q.processAllAvailable()
-      // sentinel micro-batch: 2030-01-01 (typed to match the source
-      // schema — int64 nanos or µs timestamp), impossible user id
-      val sentinelTs =
-        if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-          lit(1893456000000000000L)
-        else lit("2030-01-01 00:00:00").cast(schema("ts").dataType)
-      val sentinel = spark.range(1).select(
-        lit(-1L).as("event_id"), sentinelTs.as("ts"),
-        lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-      spark.createDataFrame(sentinel.collectAsList(), schema)
-        .write.mode("append").parquet(dir.toString)
-      q.processAllAvailable()
-    } finally q.stop()
+      java.nio.file.Files.copy(java.nio.file.Paths.get(src),
+        dir.resolve("batch0.parquet"))
+      val stream = tsNanos(spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet").parquet(dir.toString))
+        .withColumn("ts", timestamp_seconds(expr("ts div 1000000000")))
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("user_id"),
+          session_window(col("ts"), s"$gapSeconds seconds"))
+        .agg(count(lit(1)).as("n_events"),
+          unix_timestamp(min(col("ts"))).as("start_s"),
+          unix_timestamp(max(col("ts"))).as("end_s"))
+        .select(col("user_id"), col("n_events"), col("start_s"), col("end_s"))
+      val q = startStream(spark)(stream.writeStream
+        .format("memory").queryName(sinkName).outputMode("append").start())
+      try {
+        q.processAllAvailable()
+        // sentinel micro-batch: 2030-01-01 (typed to match the source
+        // schema — int64 nanos or µs timestamp), impossible user id
+        val sentinelTs =
+          if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
+            lit(1893456000000000000L)
+          else lit("2030-01-01 00:00:00").cast(schema("ts").dataType)
+        val sentinel = spark.range(1).select(
+          lit(-1L).as("event_id"), sentinelTs.as("ts"),
+          lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
+          lit(0.0).as("value"), lit("{}").as("props"))
+        spark.createDataFrame(sentinel.collectAsList(), schema)
+          .write.mode("append").parquet(dir.toString)
+        q.processAllAvailable()
+      } finally q.stop()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     spark.table(sinkName)
       .filter(col("user_id") =!= -1 && col("n_events") >= minEvents)
   }

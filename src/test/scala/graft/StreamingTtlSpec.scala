@@ -1,10 +1,15 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path => JPath}
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamOps
+import graft.streaming.{LocalCheckpointFileManager, StreamOps}
 
 /** Watermark-TTL'd band-dedup state (the r11 carried ask): the
   * (band, sig) bucket state must be EVICTED once the watermark passes
@@ -23,7 +28,12 @@ import graft.streaming.StreamOps
   *    in-window results unchanged.
   * The oracle-compared fixtures drain in one micro-batch (single
   * parquet file), where the watermark only moves after the batch, so
-  * their global-dedup results are unchanged at ANY TTL. */
+  * their global-dedup results are unchanged at ANY TTL.
+  *
+  * The last three cases pin the drive's plumbing: the no-fork
+  * checkpoint-file manager writes the tree Spark's default manager
+  * writes, a drained stream hands the session's settings back, and the
+  * session-window drive removes its temporary source copy. */
 class StreamingTtlSpec extends SparkSpec {
   import spark.implicits._
 
@@ -86,5 +96,96 @@ class StreamingTtlSpec extends SparkSpec {
       s"expected in-window dedup to drop the replay (2/band), got $counts")
     // nothing expires: both originals' keys are retained
     assert(stateRows == 8L, s"expected 8 retained state rows, got $stateRows")
+  }
+
+  /** Relative name → (POSIX mode, bytes; empty for a directory) of every
+    * entry under `root`, with the random part of a temp-file name
+    * masked. */
+  private def tree(root: JPath): Map[String, (String, Seq[Byte])] =
+    Using.resource(Files.walk(root)) { entries =>
+      entries.iterator.asScala.filter(_ != root).map { p =>
+        val name = root.relativize(p).toString
+          .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")
+        val mode = java.nio.file.attribute.PosixFilePermissions
+          .toString(Files.getPosixFilePermissions(p))
+        name -> (mode,
+          if (Files.isDirectory(p)) Seq.empty[Byte]
+          else Files.readAllBytes(p).toSeq)
+      }.toMap
+    }
+
+  test("the no-fork checkpoint manager writes the tree Spark's default writes") {
+    val conf = spark.sessionState.newHadoopConf()
+    conf.unset(LocalCheckpointFileManager.ClassKey)
+    def write(mk: (Path, org.apache.hadoop.conf.Configuration) =>
+        CheckpointFileManager): JPath = {
+      val root = Files.createTempDirectory("graft_ckpt_")
+      def p(rel: String) = new Path(root.resolve(rel).toUri)
+      val fm = mk(new Path(root.toUri), conf)
+      fm match {
+        case m: LocalCheckpointFileManager => assert(
+          m.underlying.isInstanceOf[LocalCheckpointFileManager.NoFork],
+          s"a local path fell back to ${m.underlying.getClass}")
+        case _ =>
+      }
+      def put(rel: String, text: String, overwrite: Boolean) = {
+        val out = fm.createAtomic(p(rel), overwrite)
+        out.write(text.getBytes("UTF-8"))
+        out
+      }
+      fm.mkdirs(p("offsets/state/0"))
+      put("offsets/0", "v1\n{}", overwrite = false).close()
+      put("offsets/state/0/1.delta", "delta one", overwrite = false).close()
+      put("offsets/0", "v1\n{\"rewritten\":1}", overwrite = true).close()
+      put("offsets/1", "never lands", overwrite = false).cancel()
+      val clash = put("offsets/state/0/1.delta", "clash", overwrite = false)
+      intercept[FileAlreadyExistsException](clash.close())
+      root
+    }
+    val roots = Seq(write(CheckpointFileManager.create),
+      write(new LocalCheckpointFileManager(_, _)))
+    try {
+      val Seq(expected, got) = roots.map(tree)
+      assert(expected.keySet.exists(_.endsWith(".1.delta.crc")),
+        s"expected Hadoop checksum files, got ${expected.keySet}")
+      assert(got.keySet == expected.keySet)
+      assert(got == expected)
+      assert(!got.contains("offsets/1"))
+    } finally roots.foreach(r =>
+      org.apache.commons.io.FileUtils.deleteDirectory(r.toFile))
+  }
+
+  test("a drained stream restores the session's stream settings") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      LocalCheckpointFileManager.ClassKey)
+    def drain(tag: String) = StreamOps.tumblingWindowAgg(spark, sf,
+      "1 hour", s"ttl_conf_sink_$tag").count()
+    val before = keys.map(spark.conf.getOption)
+    assert(before(1).isEmpty)
+    drain("unset")
+    assert(keys.map(spark.conf.getOption) == before)
+    val preset = Seq("3", classOf[org.apache.spark.sql.execution.streaming
+      .checkpointing.FileSystemBasedCheckpointFileManager].getName)
+    keys.zip(preset).foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      drain("preset")
+      assert(keys.map(spark.conf.getOption) == preset.map(Some(_)))
+    } finally {
+      spark.conf.set(keys(0), before(0).get)
+      spark.conf.unset(keys(1))
+    }
+  }
+
+  test("sessionWindowAgg leaves no temporary source directory behind") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def sessDirs = Using.resource(Files.list(tmp)) { ps =>
+      ps.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_sess_")).toSet
+    }
+    val before = sessDirs
+    val out = StreamOps.sessionWindowAgg(spark, sf, gapSeconds = 1800,
+      minEvents = 2, "ttl_sess_sink")
+    assert(out.count() > 0)
+    assert((sessDirs -- before).isEmpty)
   }
 }
