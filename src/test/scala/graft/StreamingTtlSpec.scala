@@ -6,8 +6,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge
 
 import graft.streaming.{LocalCheckpointFileManager, StreamOps}
 
@@ -30,10 +32,12 @@ import graft.streaming.{LocalCheckpointFileManager, StreamOps}
   * parquet file), where the watermark only moves after the batch, so
   * their global-dedup results are unchanged at ANY TTL.
   *
-  * The last three cases pin the drive's plumbing: the no-fork
+  * The remaining cases pin the drive's plumbing: the no-fork
   * checkpoint-file manager writes the tree Spark's default manager
-  * writes, a drained stream hands the session's settings back, and the
-  * session-window drive removes its temporary source copy. */
+  * writes, a drained stream hands the session's settings back, a repeat
+  * drain reuses the classes the first one compiled, the caller's session
+  * keeps its own artifact isolation, and the session-window drive
+  * removes its temporary source copy. */
 class StreamingTtlSpec extends SparkSpec {
   import spark.implicits._
 
@@ -157,23 +161,46 @@ class StreamingTtlSpec extends SparkSpec {
 
   test("a drained stream restores the session's stream settings") {
     val keys = Seq("spark.sql.shuffle.partitions",
-      LocalCheckpointFileManager.ClassKey)
+      LocalCheckpointFileManager.ClassKey,
+      "spark.sql.artifact.isolation.enabled")
     def drain(tag: String) = StreamOps.tumblingWindowAgg(spark, sf,
       "1 hour", s"ttl_conf_sink_$tag").count()
-    val before = keys.map(spark.conf.getOption)
-    assert(before(1).isEmpty)
+    // explicit values only: getOption would answer a registered default
+    def explicit = { val all = spark.conf.getAll; keys.map(all.get) }
+    val before = explicit
+    assert(before.tail.forall(_.isEmpty))
     drain("unset")
-    assert(keys.map(spark.conf.getOption) == before)
+    assert(explicit == before)
     val preset = Seq("3", classOf[org.apache.spark.sql.execution.streaming
-      .checkpointing.FileSystemBasedCheckpointFileManager].getName)
+      .checkpointing.FileSystemBasedCheckpointFileManager].getName, "true")
     keys.zip(preset).foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       drain("preset")
-      assert(keys.map(spark.conf.getOption) == preset.map(Some(_)))
-    } finally {
-      spark.conf.set(keys(0), before(0).get)
-      spark.conf.unset(keys(1))
+      assert(explicit == preset.map(Some(_)))
+    } finally keys.zip(before).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("a repeat drain compiles no new classes") {
+    // a drain's query runs in a cloned session; under per-session
+    // artifact isolation its tasks got a new class loader each time, so
+    // the codegen cache missed on every task-side class (13 here)
+    def drain() = StreamOps.statefulUserStats(spark, sf, "ttl_repeat_sink")
+      .count()
+    drain()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    drain()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the repeat drain compiled $compiled classes")
+  }
+
+  test("a session whose first action is a drain keeps its own artifact state") {
+    val fresh = spark.newSession()
+    StreamOps.tumblingWindowAgg(fresh, sf, "1 hour", "ttl_fresh_sink")
+    assert(SqlBridge.artifactIsolated(fresh),
+      "the drain fixed the caller's session to the drain's isolation setting")
   }
 
   test("sessionWindowAgg leaves no temporary source directory behind") {

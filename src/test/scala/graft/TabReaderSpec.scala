@@ -7,39 +7,52 @@ import graft.core.Schema._
 
 class TabReaderSpec extends SparkSpec {
 
-  val datasets = "/root/reference/Orange/datasets"
+  /** Small hand-written `.tab` fixtures in the shapes of Orange's
+    * iris, zoo and adult_sample_missing datasets. */
+  private def fixture(name: String): String =
+    getClass.getResource(s"/tab/$name").getPath
 
-  test("iris.tab: 3-row header, 150 rows, class role") {
-    val df = TabReader.read(spark, s"$datasets/iris.tab")
+  test("3-row header: continuous features, class role (iris shape)") {
+    val df = TabReader.read(spark, fixture("iris_small.tab"))
     assert(df.columns.toSeq ==
       Seq("sepal length", "sepal width", "petal length", "petal width", "iris"))
-    assert(df.count() == 150)
+    assert(df.count() == 6)
     val dom = Schema.domainOf(df)
     assert(dom.classVars.map(_.name) == Seq("iris"))
     assert(dom.attributes.size == 4)
     assert(dom("sepal length").kind == VarKind.Continuous)
-    // value sanity
+    // value sanity: (5.1 + 4.9 + 7.0 + 6.4 + 6.3 + 5.8) / 6
     val m = df.agg(avg(col("sepal length"))).head.getDouble(0)
-    assert(math.abs(m - 5.8433) < 0.001)
+    assert(math.abs(m - 35.5 / 6) < 1e-9)
   }
 
-  test("zoo.tab: string meta column") {
-    val df = TabReader.read(spark, s"$datasets/zoo.tab")
+  test("string meta column (zoo shape)") {
+    val df = TabReader.read(spark, fixture("zoo_small.tab"))
     val dom = Schema.domainOf(df)
     assert(dom.metas.map(_.name) == Seq("name"))
+    assert(dom("name").kind == VarKind.Str)
     assert(dom.classVars.map(_.name) == Seq("type"))
-    assert(df.count() == 101)
+    assert(dom.attributes.map(_.name) == Seq("hair", "feathers", "legs"))
+    assert(df.count() == 5)
+    assert(df.filter(col("type") === "bird").select("name").collect()
+      .map(_.getString(0)).sorted.toSeq == Seq("chicken", "flamingo"))
   }
 
-  test("adult_sample_missing.tab: declared value lists + missing tokens") {
-    val df = TabReader.read(spark,
-      "/root/reference/Orange/tests/datasets/adult_sample_missing.tab")
+  test("declared value lists + missing tokens (adult_sample_missing shape)") {
+    val df = TabReader.read(spark, fixture("adult_missing_small.tab"))
     val dom = Schema.domainOf(df)
+    assert(df.count() == 7)
     assert(dom("workclass").kind == VarKind.Discrete)
-    assert(dom("workclass").values.contains("Private"))
-    // '?' tokens must become NULL
-    assert(df.filter(col("workclass").isNull).count() > 0)
+    assert(dom("workclass").values ==
+      Seq("Private", "Self-emp-not-inc", "Local-gov", "State-gov"))
+    assert(dom("y").values == Seq("<=50K", ">50K"))
+    assert(dom.classVars.map(_.name) == Seq("y"))
+    // '?' tokens must become NULL, in discrete and continuous columns
+    assert(df.filter(col("workclass").isNull).count() == 2)
+    assert(df.filter(col("education").isNull).count() == 1)
     assert(dom("age").kind == VarKind.Continuous)
+    assert(df.filter(col("age").isNull).count() == 1)
+    assert(df.agg(sum(col("age"))).head.getDouble(0) == 260.0)
   }
 
   test("TimeVariable probe chain parses every reference _ISO_FORMAT") {
@@ -176,11 +189,13 @@ class TabReaderSpec extends SparkSpec {
   }
 
   test("round-trip write/read preserves schema and rows") {
-    val df = TabReader.read(spark, s"$datasets/iris.tab")
-    val out = "/tmp/graft_test_iris.tab"
+    val df = TabReader.read(spark, fixture("iris_small.tab"))
+    val out = java.nio.file.Files.createTempDirectory("graft_tab_rt_")
+      .resolve("iris.tab").toString
     TabReader.write(df, out)
     val back = TabReader.read(spark, out)
-    assert(back.count() == 150)
+    assert(back.count() == 6)
     assert(Schema.domainOf(back).classVars.map(_.name) == Seq("iris"))
+    assert(back.columns.toSeq == df.columns.toSeq)
   }
 }
