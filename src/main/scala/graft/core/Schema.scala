@@ -23,6 +23,7 @@ object Schema {
   val RoleKey    = "graft.role"     // feature | target | meta
   val ValuesKey  = "graft.values"   // discrete dictionary, ordered
   val TimeKey    = "graft.time"     // have_date/have_time flags
+  val KindKey    = "graft.kind"     // continuous | discrete | string | time
 
   sealed trait Role { def name: String }
   object Role {
@@ -34,12 +35,14 @@ object Schema {
     }
   }
 
-  sealed trait VarKind
+  sealed trait VarKind { def name: String }
   object VarKind {
-    case object Continuous extends VarKind
-    case object Discrete   extends VarKind
-    case object Str        extends VarKind
-    case object Time       extends VarKind
+    case object Continuous extends VarKind { val name = "continuous" }
+    case object Discrete   extends VarKind { val name = "discrete" }
+    case object Str        extends VarKind { val name = "string" }
+    case object Time       extends VarKind { val name = "time" }
+    def of(s: String): Option[VarKind] =
+      Seq(Continuous, Discrete, Str, Time).find(_.name == s)
   }
 
   /** One Orange variable descriptor. */
@@ -57,6 +60,7 @@ object Schema {
 
     def toField: StructField = {
       val b = new MetadataBuilder().putString(RoleKey, role.name)
+        .putString(KindKey, kind.name)
       if (values.nonEmpty) b.putStringArray(ValuesKey, values.toArray)
       StructField(name, dataType, nullable = true, b.build())
     }
@@ -73,17 +77,20 @@ object Schema {
   }
 
   /** Recover the domain of a DataFrame from field metadata (fields
-    * without graft metadata default to feature role, kind by type). */
+    * without graft metadata default to feature role; a field without a
+    * stored kind gets its kind from its type and value list). */
   def domainOf(df: DataFrame): ODomain = ODomain(df.schema.fields.toSeq.map { f =>
     val role = if (f.metadata.contains(RoleKey))
       Role.of(f.metadata.getString(RoleKey)) else Role.Feature
     val values = if (f.metadata.contains(ValuesKey))
       f.metadata.getStringArray(ValuesKey).toSeq else Nil
-    val kind = f.dataType match {
+    val stored = if (f.metadata.contains(KindKey))
+      VarKind.of(f.metadata.getString(KindKey)) else None
+    val kind = stored.getOrElse(f.dataType match {
       case DoubleType | FloatType | IntegerType | LongType => VarKind.Continuous
       case TimestampType => VarKind.Time
       case _ => if (values.nonEmpty) VarKind.Discrete else VarKind.Str
-    }
+    })
     OVar(f.name, kind, role, values)
   })
 

@@ -19,19 +19,22 @@ import graft.core.Tables
   *   - the new child takes cluster id = split number.
   *
   * Scale shape: each split caches the split cluster's members and runs
-  * its 2-means iterations through Lloyd's round kernel (k = 2, on
-  * [[Rounds]]): one job per iteration over the members' persisted
-  * points, planned once per split — no Catalyst planning or codegen
-  * inside the iteration loop. The kernel's first-minimum argmin sends
-  * ties to the parent (left) child, as the final `<=` reassignment
-  * does. The assignment table updates via an id-keyed join. No global
+  * its 2-means on Lloyd's round kernel (k = 2, on [[Rounds]]): Lloyd's
+  * first pass over the members' persisted points checks the |x| ≤ 1
+  * envelope (the first split's members are every row) and takes the two
+  * seeds, then one job per iteration, planned once per split — no
+  * Catalyst planning or codegen inside the iteration loop. The kernel's
+  * first-minimum argmin sends ties to the parent (left) child, as the
+  * final `<=` reassignment does. The assignment table updates via an id-keyed join. No global
   * sort, no crossJoin against the corpus — k·E bounded scans total. */
 object Bisect {
 
   /** @return one row per cluster: (cluster, n, min_id), cluster ids in
     *         split order (0 = root remainder, s = split-s child). The k
     *         rows are computed eagerly, so no cache or checkpoint
-    *         outlives the call. */
+    *         outlives the call. The |x| ≤ 1 envelope and |id| < 2⁵³ are
+    *         checked by the first split, so at k = 1 (no split) they are
+    *         not. */
   def fit(df: DataFrame, idCol: Column, feats: Seq[(String, Column)],
           k: Int, iterations: Int): DataFrame = {
     val d = feats.size
@@ -45,10 +48,6 @@ object Bisect {
     }
     var asg: DataFrame = null
     try {
-      val mx = base.agg(max(abs(col(xCols.head))),
-        xCols.tail.map(c => max(abs(col(c)))): _*).head()
-      val maxAbs = (0 until d).map(mx.getDouble).max
-      require(maxAbs <= 1.0, s"bisect envelope: max|x|=$maxAbs (pre-scale)")
       asg = base.select(col("id"), lit(0).as("cluster"))
         .localCheckpoint(eager = true)
       for (s <- 1 until k) {
@@ -59,13 +58,12 @@ object Bisect {
           .join(asg.filter(col("cluster") === chosen).select("id"), "id")
           .cache()
         try {
-          val seeds = members.orderBy(col("id")).limit(2).collect()
-          require(seeds.length == 2,
-            s"bisect: cluster $chosen has < 2 members")
-          val seed = Array.tabulate(2, d)((c, j) => seeds(c).getDouble(j + 1))
           val pts = Lloyd.points(members, xCols)
-          val cent = try Lloyd.rounds(pts, seed, iterations)((sm, n) => r10(sm / n))
-            finally pts.unpersist(blocking = false)
+          val cent = try {
+            val seed = Lloyd.seed(pts, d, 2, "bisect")
+            require(seed.length == 2, s"bisect: cluster $chosen has < 2 members")
+            Lloyd.rounds(pts, seed, iterations)((sm, n) => r10(sm / n))
+          } finally pts.unpersist(blocking = false)
           def dist(child: Int): Column = xCols.zipWithIndex.map { case (x, j) =>
             val e = col(x) - lit(cent(child)(j)); e * e
           }.reduce(_ + _)

@@ -1,9 +1,10 @@
 package graft.ml
 
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types._
 import graft.core.Tables
 
 /** Deterministic Lloyd k-means (reference Orange/clustering/kmeans.py
@@ -11,38 +12,101 @@ import graft.core.Tables
   * deterministic first-k-by-id seeding, the classic MacQueen init, so
   * the whole trajectory is reproducible and oracle-checkable).
   *
-  * Distributed shape: the rounds run in [[rounds]] on the [[Rounds]]
-  * kernel, planned ONCE. Catalyst computes each row's features x_j and
-  * their grid terms t_j = [[Tables.scaledLongTerm]](x_j) a single time
-  * into a persisted chunk cache; every round is then ONE job over it —
-  * per-row argmin assignment plus per-cluster count and exact sums of
-  * t_j, combined map-side — with no analysis, optimisation, planning or
-  * codegen inside the loop (the shape of MLlib's KMeans). The k×d
-  * centroid matrix lives on the driver and ships as a broadcast. No
-  * global sort (seeding is a TakeOrdered top-k), no crossJoin in the
-  * rounds, k·(1+d) slots of result per partition per round.
+  * Distributed shape: after ONE Catalyst projection into a persisted
+  * [[Rounds]] chunk cache ([[points]]: features x_j, grid terms
+  * t_j = [[Tables.scaledLongTerm]](x_j), id), every step is one job over
+  * it with no planning or codegen (the shape of MLlib's KMeans): the
+  * first pass ([[seed]]: envelope, id check and the k lowest-id rows, no
+  * sort), one pass per round ([[rounds]]: argmin, per-cluster count and
+  * exact Σ t_j, combined map-side), and a final pass (per-cluster count
+  * and Σ of the own-distance grid longs). The k×d centroids live on the
+  * driver and ship as a broadcast; the result rows are built on the
+  * driver, so no cache outlives the call. The id rides a double, so it
+  * must be integral and below 2⁵³ in magnitude; both fail loudly.
   *
-  * Oracle-exactness: the kernel evaluates the plan it replaced bit for
-  * bit. Distances are Σ_j (x_j − c_cj)² added left to right in
-  * ascending j (the fixed-order affine form both engines evaluate
-  * identically); argmin takes the FIRST minimum, so ties break to the
-  * lowest cluster; centroid sums are exact integer sums of t_j on the
-  * 10⁻¹² grid (order-independent; callers pre-scale features to
-  * |x| ≤ 1), valued by [[Rounds.Acc]] as the double
-  * [[Tables.scaledLongSum]] returns; centroids round to 10
-  * decimals per step. The final assignment stays a Catalyst plan:
-  * per-cluster inertia reduces through detSum's grid (squared
-  * distances exceed the |t| ≤ 1 long-grid envelope). */
+  * Oracle-exactness: bit for bit the Catalyst formulation. Distances are
+  * Σ_j (x_j − c_cj)² added left to right in ascending j (the fixed-order
+  * affine form both engines evaluate identically); argmin takes the
+  * FIRST minimum, so ties break to the lowest cluster; centroid sums are
+  * exact integer sums of t_j on the 10⁻¹² grid (order-independent;
+  * callers pre-scale features to |x| ≤ 1), valued by [[Rounds.Acc]] as
+  * the double [[Tables.scaledLongSum]] returns; centroids round to 10
+  * decimals per step. Inertia is [[Tables.detSumFast]] of the own
+  * distance (squared distances exceed the |t| ≤ 1 long-grid envelope):
+  * the exact sum of its grid longs, parsed as "Σk E-12", then Catalyst's
+  * `round(…, 6)`. */
 object Lloyd {
 
-  /** The points of `df`'s double columns `xCols` as a [[Rounds]]
-    * double cache of stride 2d: row i's features x_j, then their grid
-    * terms t_j = [[Tables.scaledLongTerm]](x_j), both computed once by
-    * Catalyst (|t| ≤ 10¹² < 2⁵³ inside the |x| ≤ 1 envelope, so t rides
-    * a double exactly). The caller unpersists the result. */
+  /** 2⁵³: every integral id below it in magnitude is exact as a double. */
+  private val IdLimit = 9007199254740992.0
+
+  /** The points of `df`'s double columns `xCols` and its integral `id`
+    * column as a [[Rounds]] double cache of stride 2d+1: row i's
+    * features x_j, their grid terms t_j = [[Tables.scaledLongTerm]](x_j),
+    * then its id, all computed once by Catalyst (|t| ≤ 10¹² < 2⁵³ inside
+    * the |x| ≤ 1 envelope, so t rides a double exactly; [[seed]] checks
+    * the id). The caller unpersists the result. */
   private[ml] def points(df: DataFrame, xCols: Seq[String]): RDD[Array[Double]] =
     Rounds.doubles(df.select(xCols.map(col) ++
-      xCols.map(c => Tables.scaledLongTerm(col(c)).cast("double")): _*))
+      xCols.map(c => Tables.scaledLongTerm(col(c)).cast("double")) :+
+      col("id").cast("double"): _*))
+
+  /** The first pass over a [[points]] cache of `d` features: fails
+    * unless max|x| ≤ 1 and max|id| < 2⁵³ (messages prefixed `what`),
+    * and returns the features of the (at most) k lowest-id rows in id
+    * order: the envelope check and the seeding in one job, with no sort.
+    * Each partition keeps its k lowest (id, x); the driver merges them. */
+  private[ml] def seed(pts: RDD[Array[Double]], d: Int, k: Int,
+                       what: String): Array[Array[Double]] = {
+    type Top = List[(Double, Array[Double])]
+    def keep(top: Top): Top = top.sortBy(_._1).take(k)
+    val (mx, mxId, top) = pts.aggregate((0.0, 0.0, List.empty: Top))({
+      case ((mx0, mi0, top0), ch) =>
+        var (mx, mi, top) = (mx0, mi0, top0)
+        var o = 0
+        while (o < ch.length) {
+          var j = 0
+          while (j < d) { mx = math.max(mx, math.abs(ch(o + j))); j += 1 }
+          val id = ch(o + 2 * d)
+          mi = math.max(mi, math.abs(id))
+          if (top.size < k || id < top.last._1)
+            top = keep((id, java.util.Arrays.copyOfRange(ch, o, o + d)) :: top)
+          o += 2 * d + 1
+        }
+        (mx, mi, top)
+    }, { case ((m1, i1, t1), (m2, i2, t2)) =>
+      (math.max(m1, m2), math.max(i1, i2), keep(t1 ++ t2))
+    })
+    require(mx <= 1.0, s"$what envelope: max|x|=$mx (pre-scale)")
+    require(mxId < IdLimit,
+      s"$what: max|id|=$mxId is not below 2^53, so it is not exact as a double")
+    top.map(_._2).toArray
+  }
+
+  /** Σ_j (x_j − c_j)² of the row at `o`, left to right in ascending j:
+    * 0.0 + e₀² is e₀² exactly, so this is the e₀² + e₁² + … of the
+    * Catalyst distance column. */
+  @inline private def dist(ch: Array[Double], o: Int, c: Array[Double]): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < c.length) { val e = ch(o + j) - c(j); s += e * e; j += 1 }
+    s
+  }
+
+  /** The nearest centroid of the row at `o`; ties break to the lowest
+    * cluster (the FIRST minimum). */
+  @inline private def nearest(ch: Array[Double], o: Int,
+                              cs: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = 0.0
+    var c = 0
+    while (c < cs.length) {
+      val s = dist(ch, o, cs(c))
+      if (c == 0 || s < bestD) { best = c; bestD = s }
+      c += 1
+    }
+    best
+  }
 
   /** `iterations` Lloyd rounds from `seed` over `pts`, one
     * [[Rounds.pass]] each. A cluster with n members and exact feature
@@ -59,23 +123,11 @@ object Lloyd {
       val acc = Rounds.pass(pts, cent, k * w) { (cs, ch, a) =>
         var o = 0
         while (o < ch.length) {
-          var best = 0
-          var bestD = 0.0
-          var c = 0
-          while (c < k) {
-            // 0.0 + e₀² is e₀² exactly, so this is the left-to-right
-            // e₀² + e₁² + … of the Catalyst distance column
-            var s = 0.0
-            var j = 0
-            while (j < d) { val e = ch(o + j) - cs(c)(j); s += e * e; j += 1 }
-            if (c == 0 || s < bestD) { best = c; bestD = s }
-            c += 1
-          }
-          val p = best * w
+          val p = nearest(ch, o, cs) * w
           a.add(p, 1L)
           var j = 0
           while (j < d) { a.add(p + 1 + j, ch(o + d + j).toLong); j += 1 }
-          o += 2 * d
+          o += 2 * d + 1
         }
       }
       val cs = cent
@@ -88,72 +140,67 @@ object Lloyd {
     cent
   }
 
-  /** @param idCol unique row id — seeds are the k lowest-id rows
+  /** Catalyst's `round(v, scale)` on a double: HALF_UP at `scale` of
+    * the shortest decimal repr. */
+  private def roundHalfUp(v: Double, scale: Int): Double =
+    JBigDecimal.valueOf(v).setScale(scale, RoundingMode.HALF_UP).doubleValue
+
+  /** The [[Tables.detSumFast]] grid long of a finite term t:
+    * floor(round(t, 12)·10¹² + 0.5). */
+  private def gridLong(t: Double): Long =
+    math.floor(roundHalfUp(t, 12) * 1e12 + 0.5).toLong
+
+  /** @param idCol unique integral row id — seeds are the k lowest-id
+    *   rows; |id| < 2⁵³
     * @param feats (name, expression) pre-scaled to |x| ≤ 1. Rows with a
-    *   NULL feature are dropped up front (na.drop below), so the
-    *   array_position argmin can never see an all-NULL distance row —
-    *   callers must not bypass that precondition (the old suffix CASE
-    *   chain fell through to cluster k−1 on NULLs; the array form would
-    *   yield a NULL cluster instead — ADVICE r16).
-    * @return one row per non-empty cluster:
-    *         (cluster, size, inertia, c_<feat>…) */
+    *   NULL or NaN feature or id are dropped up front (na.drop below).
+    * @return one row per non-empty cluster, sorted by cluster:
+    *         (cluster, size, inertia, c_<feat>…), computed eagerly */
   def fit(df: DataFrame, idCol: Column, feats: Seq[(String, Column)],
           k: Int, iterations: Int): DataFrame = {
-    val spark = df.sparkSession
     val d = feats.size
     val xCols = feats.map { case (n, _) => s"x_$n" }
     val base = df.select(idCol.as("id") +:
       feats.map { case (n, f) => f.cast("double").as(s"x_$n") }: _*)
       .na.drop()
+    base.schema("id").dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case t => throw new IllegalArgumentException(
+        s"lloyd: id column must be integral, not ${t.simpleString}")
+    }
 
+    require(k >= 1, s"lloyd: k=$k < 1")
     val pts = points(base, xCols)
-    val cent = try {
-      val mx = Rounds.envelope(pts, 2 * d, d)._2
-      require(mx <= 1.0, s"lloyd envelope: max|x|=$mx (pre-scale)")
-      // deterministic seeding: k lowest-id rows (TakeOrdered, no global
-      // sort); parquet doubles are identical in both engines
-      val seed = base.orderBy(col("id")).limit(k)
-        .collect().map(r => (1 to d).map(r.getDouble).toArray)
-      require(seed.length == k, s"lloyd: ${seed.length} seed rows < k=$k")
-      rounds(pts, seed, iterations)((s, n) => math.rint(s / n * 1e10) / 1e10)
+    val (cent, acc) = try {
+      val seeds = seed(pts, d, k, "lloyd")
+      require(seeds.length == k, s"lloyd: ${seeds.length} seed rows < k=$k")
+      val cent = rounds(pts, seeds, iterations)((s, n) => math.rint(s / n * 1e10) / 1e10)
+      // final assignment: slot c counts cluster c, slot k + c sums its
+      // members' own-distance grid longs
+      (cent, Rounds.pass(pts, cent, 2 * k) { (cs, ch, a) =>
+        var o = 0
+        while (o < ch.length) {
+          val c = nearest(ch, o, cs)
+          a.add(c, 1L)
+          a.add(k + c, gridLong(dist(ch, o, cs(c))))
+          o += 2 * d + 1
+        }
+      })
     } finally pts.unpersist(blocking = false)
 
-    val centSchema = StructType(
-      (0 until k).flatMap(c => (0 until d).map(j =>
-        StructField(s"cc_${c}_$j", DoubleType, nullable = false))).toArray)
-    val centDF = spark.createDataFrame(
-      java.util.Arrays.asList(Row.fromSeq(cent.flatten.toSeq)), centSchema)
-    def distOf(c: Int): Column =
-      (0 until d).map { j =>
-        val e = col(xCols(j)) - col(s"cc_${c}_$j"); e * e
-      }.reduce(_ + _)
-    // argmin with ties to the lowest cluster = FIRST index of the array
-    // minimum, each distance polynomial evaluated ONCE (a suffix CASE
-    // chain inlined every d_c into ~k²/2 comparisons: at k=5·d=8 the
-    // stage codegen'd to a 6.7k-line unit janino took seconds on).
-    val dsArr: Column = array((0 until k).map(distOf): _*)
-    val clusterOf: Column =
-      (array_position(dsArr, array_min(dsArr)) - 1).cast("int")
-
-    // final assignment: sizes + per-cluster inertia + centroid echo —
-    // the own-cluster distance is element_at(ds, cluster+1), the same
-    // double the round kernel minimised
-    val asg = base.crossJoin(broadcast(centDF))
-      .select(clusterOf.as("cluster"), dsArr.as("__ds"))
-    val inertiaTerm = element_at(col("__ds"), col("cluster") + 1)
-    val grouped = asg.groupBy("cluster").agg(
-      count(lit(1)).as("size"),
-      round(Tables.detSumFast(inertiaTerm), 6).as("inertia")) // terms ≤ 4·d ≪ the 2.2e3 fast-grid bound (|x| ≤ 1 envelope)
-    val centCols = feats.zipWithIndex.map { case ((n, _), j) =>
-      (0 until k - 1).foldRight(col(s"cc_${k - 1}_$j")) { (c, rest) =>
-        when(col("cluster") === c, col(s"cc_${c}_$j")).otherwise(rest)
-      }.as(s"c_$n")
+    // Σk·10⁻¹² through the string-exponent parse (correctly rounded at
+    // any magnitude — Acc.value's double division would round twice
+    // once Σk passes 2⁵³), then round(…, 6)
+    val rows = (0 until k).filter(c => acc.long(c) > 0).map { c =>
+      val inertia = java.lang.Double.parseDouble(acc.exact(k + c).toString + "E-12")
+      Row.fromSeq(Seq[Any](c, acc.long(c), roundHalfUp(inertia, 6)) ++ cent(c))
     }
-    // k rows: sorted in one partition, where a global orderBy would add
-    // a range-bounds sampling job and a shuffle
-    grouped.crossJoin(broadcast(centDF))
-      .select(col("cluster") +: col("size") +: col("inertia") +: centCols: _*)
-      .coalesce(1).sortWithinPartitions("cluster")
+    val schema = StructType(Seq(
+      StructField("cluster", IntegerType),
+      StructField("size", LongType, nullable = false),
+      StructField("inertia", DoubleType)) ++
+      feats.map { case (n, _) => StructField(s"c_$n", DoubleType, nullable = false) })
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** DuckDB twin of [[fit]]: the iteration chain unrolled as

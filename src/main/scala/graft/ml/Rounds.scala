@@ -29,7 +29,10 @@ import org.apache.spark.util.LongAccumulator
   *    [[graft.core.Tables.scaledLongSum]] and of its SQL twin.
   *  - ONE ROUNDING ([[roundScaled]]) of a term onto its integer grid.
   *  - ONE PASS ([[pass]]): one job per round over the cache, plus the
-  *    count + max|x| [[envelope]] pass.
+  *    count + max|x| [[envelope]] pass. [[Lloyd]] folds its envelope and
+  *    seeding into one first pass and ends with a final pass of 2k slots
+  *    (member counts and own-distance grid longs), so k-means plans no
+  *    Catalyst query after the projection.
   *
   * The caller releases the cache it built, in a `finally`. */
 private[ml] object Rounds {

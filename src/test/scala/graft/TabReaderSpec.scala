@@ -21,6 +21,9 @@ class TabReaderSpec extends SparkSpec {
     assert(dom.classVars.map(_.name) == Seq("iris"))
     assert(dom.attributes.size == 4)
     assert(dom("sepal length").kind == VarKind.Continuous)
+    // a `d` column without a value list is discrete, not a string
+    assert(dom("iris").kind == VarKind.Discrete)
+    assert(dom("iris").values.isEmpty)
     // value sanity: (5.1 + 4.9 + 7.0 + 6.4 + 6.3 + 5.8) / 6
     val m = df.agg(avg(col("sepal length"))).head.getDouble(0)
     assert(math.abs(m - 35.5 / 6) < 1e-9)
@@ -197,5 +200,10 @@ class TabReaderSpec extends SparkSpec {
     assert(back.count() == 6)
     assert(Schema.domainOf(back).classVars.map(_.name) == Seq("iris"))
     assert(back.columns.toSeq == df.columns.toSeq)
+    // the type row keeps the discrete class column as `d`
+    val typeRow = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(out)).get(1)
+    assert(typeRow.split("\t").toSeq == Seq("c", "c", "c", "c", "d"))
+    assert(Schema.domainOf(back)("iris").kind == VarKind.Discrete)
   }
 }
