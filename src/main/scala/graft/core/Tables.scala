@@ -49,12 +49,14 @@ object Tables {
   private val Dec = DecimalType(38, 6)
 
   /** Frees the block-manager storage behind an EAGER
-    * `df.localCheckpoint(...)` result. Iterative operators (Lloyd
-    * rounds, BPE merge rounds, label propagation) re-checkpoint a
-    * frame every round; without this, every superseded round's blocks
-    * linger until driver GC happens to collect the RDD reference — at
-    * sweep scale that's hundreds of orphaned block sets inflating
-    * NEIGHBORING queries' wall time (the r15 in-sweep contamination).
+    * `df.localCheckpoint(...)` result. Iterative operators (BPE merge
+    * rounds, label propagation and Louvain moves, connected components,
+    * the quantizer's centroid refinement, CN2 covering weights)
+    * re-checkpoint a frame every round; without this, every superseded
+    * round's blocks linger until driver GC happens to collect the RDD
+    * reference — at sweep scale that's hundreds of orphaned block sets
+    * inflating NEIGHBORING queries' wall time (the r15 in-sweep
+    * contamination).
     * Only call on frames whose checkpoint is fully superseded: a
     * locally-checkpointed RDD cannot be recomputed after unpersist, so
     * any surviving reference would fail loudly rather than respill. */
@@ -230,9 +232,15 @@ object Tables {
     // subexpression elimination and re-evaluated the moment polynomial
     // once per digit sum: ml_linear_regression 3.8 → 8.2 s at sf1m.
     // Digit sums overflow only past 2⁴² rows per group.
-    val x = floor(round(term + term * lit(0.0), 12) * lit(1e12) + lit(0.5))
-    concat(gridDigitSum(x).cast(StringType), lit("E-12")).cast(DoubleType)
+    concat(gridDigitSum(detSumTerm(term)).cast(StringType), lit("E-12"))
+      .cast(DoubleType)
   }
+
+  /** The per-row grid long [[detSumFast]] adds (a non-finite term lands
+    * at 0). Callers that sum the terms outside Catalyst (the one-class
+    * SVM) take them from this column, like [[scaledLongTerm]]. */
+  def detSumTerm(term: Column): Column =
+    floor(round(term + term * lit(0.0), 12) * lit(1e12) + lit(0.5))
 
   /** detSum with an explicit rounding scale. Use a COARSER scale for
     * large-magnitude terms: round(t, 12) on |t| ≳ 10⁴ makes t·10¹²

@@ -1,7 +1,8 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types._
 import graft.core.Tables
 
 /** Deterministic bisecting (divisive) k-means — reference
@@ -18,74 +19,119 @@ import graft.core.Tables
   *     features to |x| ≤ 1), empty children keep their centroid,
   *   - the new child takes cluster id = split number.
   *
-  * Scale shape: each split caches the split cluster's members and runs
-  * its 2-means on Lloyd's round kernel (k = 2, on [[Rounds]]): Lloyd's
-  * first pass over the members' persisted points checks the |x| ≤ 1
-  * envelope (the first split's members are every row) and takes the two
-  * seeds, then one job per iteration, planned once per split — no
-  * Catalyst planning or codegen inside the iteration loop. The kernel's
-  * first-minimum argmin sends ties to the parent (left) child, as the
-  * final `<=` reassignment does. The assignment table updates via an id-keyed join. No global
-  * sort, no crossJoin against the corpus — k·E bounded scans total. */
+  * Scale shape: ONE Catalyst projection into one [[Lloyd.points]] cache
+  * of every row (features, grid terms, id); every step after it is one
+  * job over that cache, on the [[Rounds]] kernel. The assignment is a
+  * split history on the driver — per split, the parent cluster and the
+  * two final centroids — that each pass replays per row ([[cluster]]).
+  * A split runs Lloyd's first pass (the |x| ≤ 1 envelope, which the
+  * first split sees over every row, and the two seeds) and its rounds,
+  * unchanged, over a map of the cache that keeps the parent's members;
+  * a [[census]] pass then counts every cluster and takes its min id.
+  * Jobs: (k − 1)·(iterations + 2), or one census at k = 1, with no
+  * join, sort or checkpoint. */
 object Bisect {
 
-  /** @return one row per cluster: (cluster, n, min_id), cluster ids in
-    *         split order (0 = root remainder, s = split-s child). The k
-    *         rows are computed eagerly, so no cache or checkpoint
-    *         outlives the call. The |x| ≤ 1 envelope and |id| < 2⁵³ are
-    *         checked by the first split, so at k = 1 (no split) they are
-    *         not. */
+  /** Split s (history index s − 1) of cluster `parent`: its members
+    * nearer `right` than `left` move to cluster s. */
+  private final case class Split(parent: Int, left: Array[Double], right: Array[Double])
+
+  /** The cluster of the [[Lloyd.points]] row at `o` after `splits`: a
+    * row of a split's parent stays unless it is strictly nearer the new
+    * child (a `<=` tie stays with the parent). */
+  private def cluster(ch: Array[Double], o: Int, splits: Array[Split]): Int = {
+    var c = 0
+    var s = 0
+    while (s < splits.length) {
+      val sp = splits(s)
+      if (c == sp.parent &&
+          !(Lloyd.dist(ch, o, sp.left) <= Lloyd.dist(ch, o, sp.right))) c = s + 1
+      s += 1
+    }
+    c
+  }
+
+  /** Per cluster after `splits`, (rows, min id) over every row of `pts`
+    * (`d` features): one job. An empty cluster reads (0, +∞). */
+  private def census(pts: RDD[Array[Double]], d: Int,
+                     splits: Array[Split]): Array[(Long, Double)] = {
+    val k = splits.length + 1
+    val st = 2 * d + 1
+    val (n, lo) = pts.aggregate(
+        (new Array[Long](k), Array.fill(k)(Double.PositiveInfinity)))({
+      case ((n, lo), ch) =>
+        var o = 0
+        while (o < ch.length) {
+          val c = cluster(ch, o, splits)
+          n(c) += 1
+          lo(c) = math.min(lo(c), ch(o + st - 1))
+          o += st
+        }
+        (n, lo)
+    }, { case ((n1, l1), (n2, l2)) =>
+      (Array.tabulate(k)(c => n1(c) + n2(c)),
+        Array.tabulate(k)(c => math.min(l1(c), l2(c))))
+    })
+    n.zip(lo)
+  }
+
+  /** @return one row per non-empty cluster: (cluster, n, min_id),
+    *         cluster ids in split order (0 = root remainder, s = split-s
+    *         child), built eagerly on the driver, so no cache outlives
+    *         the call. The |x| ≤ 1 envelope and |id| < 2⁵³ are checked
+    *         by the first split, so at k = 1 (no split) only the min id
+    *         is: it must be exact as a double. */
   def fit(df: DataFrame, idCol: Column, feats: Seq[(String, Column)],
           k: Int, iterations: Int): DataFrame = {
     val d = feats.size
+    val st = 2 * d + 1
     val xCols = feats.map { case (n, _) => s"x_$n" }
-    val base = df.select(idCol.cast("long").as("id") +:
-      feats.map { case (n, f) => f.cast("double").as(s"x_$n") }: _*)
-      .na.drop().cache()
     def r10(v: Double): Double = {
       val p = v * 1e10
       (if (p >= 0) math.floor(p + 0.5) else math.ceil(p - 0.5)) / 1e10
     }
-    var asg: DataFrame = null
-    try {
-      asg = base.select(col("id"), lit(0).as("cluster"))
-        .localCheckpoint(eager = true)
+    val pts = Lloyd.points(df.select(idCol.cast("long").as("id") +:
+      feats.map { case (n, f) => f.cast("double").as(s"x_$n") }: _*)
+      .na.drop(), xCols)
+    val sizes = try {
+      var splits = Array.empty[Split]
+      var sizes: Array[(Long, Double)] = null // the last census
       for (s <- 1 until k) {
-        val chosen = asg.groupBy("cluster").agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getInt(0), r.getLong(1)))
-          .minBy { case (c, n) => (-n, c) }._1
-        val members = base
-          .join(asg.filter(col("cluster") === chosen).select("id"), "id")
-          .cache()
-        try {
-          val pts = Lloyd.points(members, xCols)
-          val cent = try {
-            val seed = Lloyd.seed(pts, d, 2, "bisect")
-            require(seed.length == 2, s"bisect: cluster $chosen has < 2 members")
-            Lloyd.rounds(pts, seed, iterations)((sm, n) => r10(sm / n))
-          } finally pts.unpersist(blocking = false)
-          def dist(child: Int): Column = xCols.zipWithIndex.map { case (x, j) =>
-            val e = col(x) - lit(cent(child)(j)); e * e
-          }.reduce(_ + _)
-          val childAsg = members.select(col("id"),
-            when(dist(0) <= dist(1), lit(chosen)).otherwise(lit(s)).as("newc"))
-          val prevAsg = asg
-          asg = asg.join(childAsg, Seq("id"), "left")
-            .select(col("id"),
-              coalesce(col("newc"), col("cluster")).as("cluster"))
-            .localCheckpoint(eager = true)
-          Tables.unpersistLocalCheckpoint(prevAsg)
-        } finally members.unpersist()
+        // the largest cluster; before the first split there is only 0
+        val chosen = if (s == 1) 0 else sizes.indices.minBy(c => (-sizes(c)._1, c))
+        val hist = splits
+        val members = pts.map { ch =>
+          val out = new Array[Double](ch.length)
+          var n = 0
+          var o = 0
+          while (o < ch.length) {
+            if (cluster(ch, o, hist) == chosen) {
+              System.arraycopy(ch, o, out, n, st); n += st
+            }
+            o += st
+          }
+          java.util.Arrays.copyOf(out, n)
+        }
+        val seed = Lloyd.seed(members, d, 2, "bisect")
+        require(seed.length == 2, s"bisect: cluster $chosen has < 2 members")
+        val cent = Lloyd.rounds(members, seed, iterations)((sm, n) => r10(sm / n))
+        splits :+= Split(chosen, cent(0), cent(1))
+        sizes = census(pts, d, splits)
       }
-      val out = asg.groupBy("cluster")
-        .agg(count(lit(1)).as("n"), min(col("id")).as("min_id"))
-      df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(out.collect().sortBy(_.getInt(0)): _*),
-        out.schema)
-    } finally {
-      if (asg != null) Tables.unpersistLocalCheckpoint(asg)
-      base.unpersist()
+      if (sizes == null) census(pts, d, splits) else sizes
+    } finally pts.unpersist(blocking = false)
+
+    val rows = sizes.indices.filter(c => sizes(c)._1 > 0).map { c =>
+      val (n, lo) = sizes(c)
+      require(math.abs(lo) < Lloyd.IdLimit,
+        s"bisect: min id $lo of cluster $c is not below 2^53, so it is not exact as a double")
+      Row(c, n, lo.toLong)
     }
+    val schema = StructType(Seq(
+      StructField("cluster", IntegerType, nullable = false),
+      StructField("n", LongType, nullable = false),
+      StructField("min_id", LongType)))
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** DuckDB twin of [[fit]]: splits unroll as (size-argmax → members →

@@ -118,9 +118,6 @@ object KernelSVM {
       .select(col("mse"), lit(d).as("hidden_dim"), lit(gamma).as("gamma"))
   }
 
-  /** DuckDB twin of [[mlpRegressionSummary]]: tanh features inlined as
-    * identical literals in a MATERIALIZED CTE + the squared-loss GD
-    * unrolled by [[SGD.linearGDSql]]. */
   /** Softsign hidden units t/(1+|t|) (Glorot & Bengio 2010) over the
     * same md5-keyed random projections as [[tanhFeatures]]. Unlike the
     * exp-composed tanh, softsign is PURE IEEE arithmetic (+ × ÷ |·|),
@@ -169,6 +166,9 @@ object KernelSVM {
     }
   }
 
+  /** DuckDB twin of [[mlpRegressionSummary]]: tanh features inlined as
+    * identical literals in a MATERIALIZED CTE + the squared-loss GD
+    * unrolled by [[SGD.linearGDSql]]. */
   def mlpRegressionSummarySql(table: String, xSqls: Seq[String],
                               ySql: String, d: Int = 16,
                               gamma: Double = 0.5, iterations: Int = 30,

@@ -38,7 +38,7 @@ import graft.core.Tables
 object Lloyd {
 
   /** 2⁵³: every integral id below it in magnitude is exact as a double. */
-  private val IdLimit = 9007199254740992.0
+  private[ml] val IdLimit = 9007199254740992.0
 
   /** The points of `df`'s double columns `xCols` and its integral `id`
     * column as a [[Rounds]] double cache of stride 2d+1: row i's
@@ -86,7 +86,7 @@ object Lloyd {
   /** Σ_j (x_j − c_j)² of the row at `o`, left to right in ascending j:
     * 0.0 + e₀² is e₀² exactly, so this is the e₀² + e₁² + … of the
     * Catalyst distance column. */
-  @inline private def dist(ch: Array[Double], o: Int, c: Array[Double]): Double = {
+  @inline private[ml] def dist(ch: Array[Double], o: Int, c: Array[Double]): Double = {
     var s = 0.0
     var j = 0
     while (j < c.length) { val e = ch(o + j) - c(j); s += e * e; j += 1 }
@@ -188,12 +188,11 @@ object Lloyd {
       })
     } finally pts.unpersist(blocking = false)
 
-    // Σk·10⁻¹² through the string-exponent parse (correctly rounded at
-    // any magnitude — Acc.value's double division would round twice
-    // once Σk passes 2⁵³), then round(…, 6)
+    // Σk·10⁻¹² through the string-exponent parse (Acc.value would round
+    // twice once Σk passes 2⁵³), then round(…, 6)
     val rows = (0 until k).filter(c => acc.long(c) > 0).map { c =>
-      val inertia = java.lang.Double.parseDouble(acc.exact(k + c).toString + "E-12")
-      Row.fromSeq(Seq[Any](c, acc.long(c), roundHalfUp(inertia, 6)) ++ cent(c))
+      Row.fromSeq(Seq[Any](c, acc.long(c), roundHalfUp(acc.detSum(k + c), 6)) ++
+        cent(c))
     }
     val schema = StructType(Seq(
       StructField("cluster", IntegerType),

@@ -1,8 +1,7 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.core.{PortableHash, Tables}
 
 /** One-class SVM outlier detector (reference
@@ -18,9 +17,10 @@ import graft.core.{PortableHash, Tables}
   *   min_w,ρ  ½‖w‖² − ρ + 1/(νn) Σ max(0, ρ − w·z(x_i))
   *
   * solved by full-batch subgradient descent: each iteration is ONE
-  * distributed aggregation (Σ z_i over the margin violators + their
-  * count, detSum-reduced, weights broadcast) — the same iterative-ML
-  * shape as SGD.scala, linear per pass at any scale.
+  * [[Rounds]] pass over z and its detSum grid longs, projected once
+  * (Σ z_i over the margin violators + their count, weights broadcast)
+  * — the same iterative-ML shape as SGD.scala, linear per pass at any
+  * scale. The rank-k ρ and the scoring are Catalyst plans.
   *
   * Determinism: ω/b come from md5-derived Box–Muller draws
   * (PortableHash), gradient sums reduce through detSum, and weights are
@@ -133,50 +133,59 @@ object OneClassSVM {
   def fitPredict(df: DataFrame, xs: Seq[(String, Column)], nu: Double = 0.1,
                  d: Int = 32, gamma: Double = 0.5, iterations: Int = 30,
                  lr: Double = 0.1): DataFrame = {
-    val spark = df.sparkSession
-    val feats = rffFeatures(xs.map(_._2), d, gamma)
-    val base = df.select(col("*") +: feats: _*).cache()
-    val n = base.count()
-    require(n > 0, "empty input")
+    val scored = df.select(col("*") +: rffFeatures(xs.map(_._2), d, gamma): _*)
+    // z_j then their detSum grid longs, stride 2d. A row with a NULL
+    // input has NULL z; it reads NaN here, so its margin is NaN and,
+    // like Catalyst's NULL margin, never violates.
+    val zs = (0 until d).map(j => coalesce(col(s"z$j"), lit(Double.NaN)))
+    val pts = Rounds.doubles(scored.select(
+      zs ++ zs.map(z => Tables.detSumTerm(z).cast("double")): _*))
+    val (w, n) = try {
+      val n = Rounds.envelope(pts, 2 * d, 0)._1 // the count pass
+      require(n > 0, "empty input")
+      var w = Array.fill(d)(1.0 / d) // uniform init, deterministic
+      var rho = 0.0
+      val inv = 1.0 / (nu * n)
+      for (_ <- 1 to iterations) {
+        // slot j < d: Σ of the violators' z_j grid longs; slot d: their
+        // count. The margin adds z_j·w_j left to right in ascending j,
+        // as Catalyst's reduce(_ + _) did.
+        val acc = Rounds.pass(pts, (w, rho), d + 1) { (state, ch, a) =>
+          val (w, rho) = state
+          var o = 0
+          while (o < ch.length) {
+            var m = ch(o) * w(0)
+            var j = 1
+            while (j < d) { m += ch(o + j) * w(j); j += 1 }
+            if (m < rho) {
+              j = 0
+              while (j < d) { a.add(j, ch(o + d + j).toLong); j += 1 }
+              a.add(d, 1L)
+            }
+            o += 2 * d
+          }
+        }
+        val nv = acc.long(d)
+        w = Array.tabulate(d) { j =>
+          val g = w(j) - inv * acc.detSum(j)
+          math.rint((w(j) - lr * g) * 1e10) / 1e10 }
+        rho = math.rint((rho - lr * (-1.0 + inv * nv)) * 1e10) / 1e10
+      }
+      (w, n)
+    } finally pts.unpersist(blocking = false)
 
-    val wSchema = StructType((0 until d).map(j =>
-      StructField(s"wc$j", DoubleType, nullable = false)))
-    def wDF(w: Array[Double]) = spark.createDataFrame(
-      java.util.Arrays.asList(Row.fromSeq(w.toSeq)), wSchema)
-    def margin = (0 until d).map(j => col(s"z$j") * col(s"wc$j")).reduce(_ + _)
-
-    var w = Array.fill(d)(1.0 / d) // uniform init, deterministic
-    var rho = 0.0
-    val inv = 1.0 / (nu * n)
-    for (_ <- 1 to iterations) {
-      val withM = base.crossJoin(broadcast(wDF(w)))
-        .withColumn("__viol", (margin < rho).cast("int"))
-      val aggs = (0 until d).map(j =>
-        Tables.detSum(when(col("__viol") === 1, col(s"z$j")).otherwise(0.0))
-          .as(s"g$j")) :+ sum(col("__viol")).as("nv")
-      val row = withM.agg(aggs.head, aggs.tail: _*).head()
-      val nv = row.getLong(d)
-      w = w.zipWithIndex.map { case (wi, j) =>
-        val g = wi - inv * (if (row.isNullAt(j)) 0.0 else row.getDouble(j))
-        math.rint((wi - lr * g) * 1e10) / 1e10 }
-      rho = math.rint((rho - lr * (-1.0 + inv * nv)) * 1e10) / 1e10
-    }
     // finishing step: at the optimum, ρ is the ν-quantile of the
     // projections w·z (Schölkopf's KKT condition) — set it exactly so
     // is_outlier flags the ν-fraction regardless of GD step-size. The
     // k-th smallest margin = max of the k smallest (value-based, no
     // row-order dependence).
+    val margin = (0 until d).map(j => col(s"z$j") * lit(w(j))).reduce(_ + _)
     val k = math.max(1, math.floor(nu * n).toInt)
-    val mCol = base.crossJoin(broadcast(wDF(w)))
-      .select(margin.as("__m")).orderBy(col("__m").asc).limit(k)
+    val mCol = scored.select(margin.as("__m")).orderBy(col("__m").asc).limit(k)
       .agg(max(col("__m"))).head()
-    rho = math.rint(mCol.getDouble(0) * 1e10) / 1e10
-    val out = base.crossJoin(broadcast(wDF(w)))
-      .withColumn("score", round(margin - rho, 6))
+    val rho = math.rint(mCol.getDouble(0) * 1e10) / 1e10
+    scored.withColumn("score", round(margin - rho, 6))
       .withColumn("is_outlier", (col("score") < 0).cast("int"))
-      .drop((0 until d).map(j => s"wc$j"): _*)
       .drop((0 until d).map(j => s"z$j"): _*)
-    base.unpersist()
-    out
   }
 }

@@ -7,10 +7,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
-/** The round kernel of the hand-written JVM learners — [[Lloyd]] (and
-  * [[Bisect]] through it), [[SGD]], [[Softmax]], [[AdaBoost]] and
-  * [[GradBoost]]. Each learner keeps only its per-row arithmetic and its
-  * driver-side update; this object owns the rest:
+/** The round kernel of the hand-written JVM learners: [[Lloyd]],
+  * [[Bisect]] (its splits run Lloyd's seed and rounds), [[OneClassSVM]],
+  * [[SGD]], [[Softmax]], [[AdaBoost]] and [[GradBoost]]. Each learner
+  * keeps only its per-row arithmetic and its driver-side update; this
+  * object owns the rest:
   *
   *  - ONE CHUNK CACHE: the learner's input, projected once by Catalyst,
   *    persisted as row-major primitive chunks of up to 2¹⁶ rows — a
@@ -24,15 +25,17 @@ import org.apache.spark.util.LongAccumulator
   *  - ONE EXACT ACCUMULATOR ([[Acc]]): integer slots that live in longs
   *    and spill into BigInteger before they could overflow, so a sum of
   *    grid terms is exact and order-independent at ANY row count. Its
-  *    value is the exact integer, correctly rounded to a double, then
+  *    `value` is the exact integer, correctly rounded to a double, then
   *    divided by the grid — the two steps of
-  *    [[graft.core.Tables.scaledLongSum]] and of its SQL twin.
+  *    [[graft.core.Tables.scaledLongSum]] and of its SQL twin, which
+  *    round twice once the sum passes 2⁵³. Its `detSum` parses "Σk
+  *    E-12" and rounds once, as [[graft.core.Tables.detSumFast]] does.
   *  - ONE ROUNDING ([[roundScaled]]) of a term onto its integer grid.
   *  - ONE PASS ([[pass]]): one job per round over the cache, plus the
-  *    count + max|x| [[envelope]] pass. [[Lloyd]] folds its envelope and
-  *    seeding into one first pass and ends with a final pass of 2k slots
-  *    (member counts and own-distance grid longs), so k-means plans no
-  *    Catalyst query after the projection.
+  *    count + max|x| [[envelope]] pass. Lloyd and Bisect fold their
+  *    envelope and seeding into one first pass and count their clusters
+  *    in a final pass, so k-means plans no Catalyst query after the
+  *    projection.
   *
   * The caller releases the cache it built, in a `finally`. */
 private[ml] object Rounds {
@@ -171,6 +174,11 @@ private[ml] object Rounds {
       * correctly rounded (BigInteger.doubleValue, like Spark's
       * DECIMAL→DOUBLE and the SQL twins' VARCHAR→DOUBLE), then ÷ grid. */
     def value(i: Int, grid: Double): Double = exact(i).doubleValue / grid
+
+    /** Slot `i`'s sum of [[graft.core.Tables.detSumTerm]] grid longs as
+      * [[graft.core.Tables.detSumFast]] returns it: "Σk E-12" parsed. */
+    def detSum(i: Int): Double =
+      java.lang.Double.parseDouble(exact(i).toString + "E-12")
   }
 
   object Acc {

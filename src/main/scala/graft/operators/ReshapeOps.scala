@@ -111,25 +111,11 @@ object ReshapeOps {
   }
 
   /** Row-wise aggregate across columns (owaggregatecolumns.py:32-230):
-    * Sum/Mean/Min/Max/... across selected columns within a row — pure
-    * scalar expressions, codegen'd, no shuffle. */
+    * Sum/Min/Max across selected columns within a row — pure scalar
+    * expressions, codegen'd, no shuffle. */
   object RowWise {
     def sumCols(cs: Seq[Column]): Column  = cs.reduce(_ + _)
-    def meanCols(cs: Seq[Column]): Column = cs.reduce(_ + _) / cs.length
     def minCols(cs: Seq[Column]): Column  = least(cs: _*)
     def maxCols(cs: Seq[Column]): Column  = greatest(cs: _*)
-    def prodCols(cs: Seq[Column]): Column = cs.reduce(_ * _)
-    /** Sample variance across columns within a row. */
-    def varCols(cs: Seq[Column]): Column = {
-      val n = cs.length
-      val m = meanCols(cs)
-      cs.map(c => (c - m) * (c - m)).reduce(_ + _) / (n - 1)
-    }
-    def medianCols(cs: Seq[Column]): Column = {
-      val arr = array_sort(array(cs: _*))
-      val n = cs.length
-      if (n % 2 == 1) element_at(arr, n / 2 + 1)
-      else (element_at(arr, n / 2) + element_at(arr, n / 2 + 1)) / 2
-    }
   }
 }

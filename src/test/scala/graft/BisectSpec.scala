@@ -5,7 +5,9 @@ import graft.core.Tables
 
 /** Deterministic bisecting k-means (Bisect) + CN2-SD weighted covering
   * — invariant pins for the round-7 oracle devices (the strong check is
-  * the DuckDB oracle; these pin semantics on the small fixture). */
+  * the DuckDB oracle; these pin semantics on the small fixture), plus
+  * Bisect's schema, its id check, the jobs a fit launches and cache
+  * release. */
 class BisectSpec extends SparkSpec {
 
   private def emb = Tables.load(spark, sf, "embeddings")
@@ -42,6 +44,56 @@ class BisectSpec extends SparkSpec {
     // id 2 stays with id 0 (to the new child it would be 0 and 0.375)
     assert(out.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq ==
       Seq((0, 2L, 0L), (1, 1L, 1L)))
+  }
+
+  test("a child left empty by its split is left out") {
+    import spark.implicits._
+    // every row sits on both seeds, so every tie stays with the parent
+    val same = (0L until 4L).map(i => (i, 0.5)).toDF("id", "x")
+    val out = graft.ml.Bisect.fit(same, col("id"), Seq(("x", col("x"))), 2, 2)
+      .collect()
+    assert(out.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq ==
+      Seq((0, 4L, 0L)))
+  }
+
+  test("bisect result schema") {
+    import org.apache.spark.sql.types._
+    assert(graft.ml.Bisect.fit(tie, col("id"), Seq(("x", col("x"))), 2, 1)
+      .schema == StructType(Seq(
+        StructField("cluster", IntegerType, nullable = false),
+        StructField("n", LongType, nullable = false),
+        StructField("min_id", LongType, nullable = true))))
+  }
+
+  test("bisect plans only its projection: (k-1)(iterations+2) jobs") {
+    import spark.implicits._
+    val df = (0 until 60).map(i => (i.toLong, (i * 7 % 60) / 60.0,
+      (i * 11 % 60) / 60.0)).toDF("id", "a", "b")
+    val (k, iterations) = (3, 2)
+    val (jobs, ps) = probe("bisect-fit") {
+      Bench.consume(graft.ml.Bisect.fit(df, col("id"),
+        Seq(("a", col("a")), ("b", col("b"))), k, iterations))
+    }
+    // per split the seed pass, the rounds and a census; then the consume
+    assert(jobs == (k - 1) * (iterations + 2) + 1)
+    // the projection behind the cache and the consume, nothing else
+    assert(ps.size == 2, ps.mkString("\n"))
+    assert(ps.head.contains("DeserializeToObject"), ps.head)
+    for (p <- ps; op <- Seq("TakeOrdered", "Join", "Aggregate", "Exchange"))
+      assert(!p.contains(op), p)
+  }
+
+  test("at k = 1 the min id must be exact as a double") {
+    import spark.implicits._
+    val ok = graft.ml.Bisect.fit(Seq((5L, 0.1), (3L, 0.2)).toDF("id", "x"),
+      col("id"), Seq(("x", col("x"))), 1, 1).collect()
+    assert(ok.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq ==
+      Seq((0, 2L, 3L)))
+    val e = intercept[IllegalArgumentException] {
+      graft.ml.Bisect.fit(Seq((-(1L << 53), 0.1), (3L, 0.2)).toDF("id", "x"),
+        col("id"), Seq(("x", col("x"))), 1, 1)
+    }
+    assert(e.getMessage.contains("is not below 2^53"))
   }
 
   test("bisect fails the envelope check and leaves no persisted RDD") {

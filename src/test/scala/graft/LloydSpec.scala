@@ -1,11 +1,6 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
@@ -215,55 +210,22 @@ class LloydSpec extends SparkSpec {
 
   test("fit plans only its projection: its passes are jobs, no SQL query") {
     import spark.implicits._
-    val sc = spark.sparkContext
     val df = (0 until 60).map(i => (i.toLong, (i * 7 % 60) / 60.0,
       (i * 11 % 60) / 60.0)).toDF("id", "a", "b")
-    val jobs = new AtomicInteger
-    val plans = new ConcurrentLinkedQueue[String]
-    @volatile var barrier: (String, CountDownLatch) = ("", new CountDownLatch(0))
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val group = e.properties.getProperty("spark.jobGroup.id")
-        if (group == "lloyd-fit") jobs.incrementAndGet()
-        if (group == barrier._1) barrier._2.countDown()
-      }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case e: SparkListenerSQLExecutionStart => plans.add(e.physicalPlanDescription)
-        case _ =>
-      }
-    }
-    // the listener bus delivers in order: once a marker job's start
-    // arrives, every event posted before it has arrived too
-    def drain(tag: String): Unit = {
-      barrier = (tag, new CountDownLatch(1))
-      sc.setJobGroup(tag, tag)
-      sc.parallelize(Seq(1), 1).count()
-      assert(barrier._2.await(60, TimeUnit.SECONDS), s"$tag never arrived")
-    }
-    sc.addSparkListener(listener)
-    try {
-      drain("lloyd-before")
-      jobs.set(0)
-      plans.clear()
-      val iterations = 3
-      sc.setJobGroup("lloyd-fit", "lloyd-fit")
+    val iterations = 3
+    val (jobs, ps) = probe("lloyd-fit") {
       Bench.consume(Lloyd.fit(df, col("id"),
         Seq(("a", col("a")), ("b", col("b"))), k = 3, iterations))
-      drain("lloyd-after")
-      // first pass, the rounds, final pass, consume
-      assert(jobs.get == iterations + 3)
-      // two SQL executions: the projection behind the cache (Dataset.rdd
-      // registers one, with no job of its own) and the consume; no
-      // seed query, no join and no aggregate
-      val ps = plans.asScala.toSeq
-      assert(ps.size == 2, ps.mkString("\n"))
-      assert(ps.head.contains("DeserializeToObject"), ps.head)
-      assert(ps(1).contains("OverwriteByExpression"), ps(1))
-      for (p <- ps; op <- Seq("TakeOrdered", "Join", "Aggregate", "Exchange"))
-        assert(!p.contains(op), p)
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.clearJobGroup()
     }
+    // first pass, the rounds, final pass, consume
+    assert(jobs == iterations + 3)
+    // two SQL executions: the projection behind the cache (Dataset.rdd
+    // registers one, with no job of its own) and the consume; no seed
+    // query, no join and no aggregate
+    assert(ps.size == 2, ps.mkString("\n"))
+    assert(ps.head.contains("DeserializeToObject"), ps.head)
+    assert(ps(1).contains("OverwriteByExpression"), ps(1))
+    for (p <- ps; op <- Seq("TakeOrdered", "Join", "Aggregate", "Exchange"))
+      assert(!p.contains(op), p)
   }
 }
