@@ -60,11 +60,10 @@ object AdaBoost {
     // The picked stumps enter every round as a BROADCAST ROW
     // (k_j candidate index + a_j alpha per round slot, −1/0.0 for rounds
     // not yet played) instead of folded literals, so all R rounds and
-    // the final accuracy pass reuse ONE physical plan — the same device
-    // as SGD.linearGD; literal alphas forced a whole-stage-codegen
-    // recompile per round. a_j = 0 terms add exactly 0.0, so F (and the
-    // selection trajectory the oracle replays) is bit-identical to the
-    // folded form.
+    // the final accuracy pass reuse ONE physical plan; literal alphas
+    // forced a whole-stage-codegen recompile per round. a_j = 0 terms
+    // add exactly 0.0, so F (and the selection trajectory the oracle
+    // replays) is bit-identical to the folded form.
     val stSchema = StructType((1 to rounds).flatMap(j => Seq(
       StructField(s"k_$j", IntegerType, nullable = false),
       StructField(s"a_$j", DoubleType, nullable = false))))

@@ -42,8 +42,7 @@ object ClusterEval {
     }
   }
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  private def r6(x: Double): Double = Rounds.roundHalfUp(x, 6)
 
   /** One row: (mi, emi, h_u, h_v, ami), each rounded to 6 decimals.
     * Natural-log MI (sklearn's unit). */

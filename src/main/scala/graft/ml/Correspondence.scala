@@ -134,8 +134,7 @@ object Correspondence {
         StructField("inertia_share", DoubleType, nullable = false))))
   }
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  private def r6(x: Double): Double = Rounds.roundHalfUp(x, 6)
 
   // ---- oracle-exact variant: deflated power iteration on BᵀB --------
 

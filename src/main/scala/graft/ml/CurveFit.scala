@@ -62,8 +62,7 @@ object CurveFit {
     FitResult(theta, sse)
   }
 
-  private def round10(v: Double): Double =
-    BigDecimal(v).setScale(10, BigDecimal.RoundingMode.HALF_UP).toDouble
+  private def round10(v: Double): Double = Rounds.roundHalfUp(v, 10)
 
   /** Closed-form exponential fit y = a·e^(bx) by linear regression on
     * ln y (requires y > 0 — rows violating it are dropped, as scipy's

@@ -25,47 +25,48 @@ object KernelSVM {
   /** Fit an RBF SVC via RFF + hinge GD; y must be ±1. Returns the
     * linearGD weights row (w_z0..w_z{d-1}, intercept, accuracy).
     *
-    * The fit routes through [[SGD.featureGen]]: the chunked JVM cache
-    * stores the nRaw RAW doubles per row and rebuilds the d cosine
-    * features per pass (or once, when they fit `featCacheMaxBytes`).
-    * This is the single-box scale guard the sf100 rehearsal demanded —
-    * the expanded 64-RFF cache over 600M rows is ~312 GB where the raw
-    * cache is ~9.6 GB. The JVM expansion below reproduces the Column
-    * expressions bit-for-bit: same left-fold `Σ xᵢ·fᵢ` order, then
-    * `+ off`, `java.lang.Math.cos` (what Catalyst's Cos codegen calls),
-    * then `· amp` — KernelSVMSpec pins gen ≡ non-gen on both the
-    * persisted-expansion and recompute-per-pass branches.
-    * @param useGen escape hatch for the spec's non-gen twin. */
+    * The fit routes through [[SGD.featureGen]]: while the d cosine
+    * features of every row fit [[SGD.featCacheMaxBytes]] (half the heap),
+    * the chunk cache holds them; past it, the cache stores the nRaw RAW
+    * doubles per row and rebuilds the features per pass. This is the
+    * single-box scale guard the sf100 rehearsal demanded — the expanded
+    * 64-RFF cache over 600M rows is ~312 GB where the raw cache is
+    * ~9.6 GB. The JVM expansion below reproduces the Column expressions
+    * bit-for-bit: same left-fold `Σ xᵢ·fᵢ` order, then `+ off`,
+    * `java.lang.Math.cos` (what Catalyst's Cos codegen calls), then
+    * `· amp` — KernelSVMSpec pins the two branches bit-equal. */
   def rbfSvcFit(df: DataFrame, xs: Seq[Column], y: Column,
                 d: Int = 32, gamma: Double = 8.0, iterations: Int = 30,
-                lr: Double = 1.0, useGen: Boolean = true): DataFrame = {
+                lr: Double = 1.0): DataFrame =
+    rbfSvcFitWithin(df, xs, y, d, gamma, iterations, lr, SGD.featCacheMaxBytes)
+
+  /** [[rbfSvcFit]] with the expanded-feature cache budget given. */
+  private[graft] def rbfSvcFitWithin(df: DataFrame, xs: Seq[Column], y: Column,
+      d: Int, gamma: Double, iterations: Int, lr: Double,
+      cacheMaxBytes: Long): DataFrame = {
     val feats = OneClassSVM.rffFeatures(xs, d, gamma)
       .zipWithIndex.map { case (f, j) => (s"z$j", f.as(s"z$j")) }
-    // wide-path contract: null feature rows dropped up front (the
-    // primitive-array gradient cannot represent them)
+    // null feature rows dropped up front: linearGD refuses NULL cells
     val nonNull = xs.map(_.isNotNull).reduce(_ && _)
-    val gen = if (!useGen) None else {
-      val (freqs, offs) = OneClassSVM.rffConstants(xs.length, d, gamma)
-      val fr = freqs.map(_.toArray).toArray
-      val of = offs.toArray
-      val amp = math.sqrt(2.0 / d)
-      val nRaw = xs.length
-      val dd = d
-      Some(SGD.featureGen(xs.map(_.cast("double")), d,
-        (in, inOff, out, outOff) => {
-          var j = 0
-          while (j < dd) {
-            val f = fr(j)
-            var s = in(inOff) * f(0)
-            var i = 1
-            while (i < nRaw) { s += in(inOff + i) * f(i); i += 1 }
-            out(outOff + j) = Math.cos(s + of(j)) * amp
-            j += 1
-          }
-        }))
-    }
-    SGD.linearGD(df.filter(nonNull), feats.map { case (n, c) => (n, c) }, y,
-      iterations, lr, SGD.HingeLoss, gen)
+    val (freqs, offs) = OneClassSVM.rffConstants(xs.length, d, gamma)
+    val fr = freqs.map(_.toArray).toArray
+    val of = offs.toArray
+    val amp = math.sqrt(2.0 / d)
+    val nRaw = xs.length
+    val gen = SGD.featureGen(xs.map(_.cast("double")), d,
+      (in, inOff, out, outOff) => {
+        var j = 0
+        while (j < d) {
+          val f = fr(j)
+          var s = in(inOff) * f(0)
+          var i = 1
+          while (i < nRaw) { s += in(inOff + i) * f(i); i += 1 }
+          out(outOff + j) = Math.cos(s + of(j)) * amp
+          j += 1
+        }
+      })
+    SGD.linearGDWithin(df.filter(nonNull), feats, y, iterations, lr,
+      SGD.HingeLoss, Some(gen), cacheMaxBytes)
   }
 
   /** Fit and report (accuracy, d, gamma) — the query-facing summary row

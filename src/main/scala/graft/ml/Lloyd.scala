@@ -1,6 +1,5 @@
 package graft.ml
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -140,15 +139,10 @@ object Lloyd {
     cent
   }
 
-  /** Catalyst's `round(v, scale)` on a double: HALF_UP at `scale` of
-    * the shortest decimal repr. */
-  private def roundHalfUp(v: Double, scale: Int): Double =
-    JBigDecimal.valueOf(v).setScale(scale, RoundingMode.HALF_UP).doubleValue
-
   /** The [[Tables.detSumFast]] grid long of a finite term t:
     * floor(round(t, 12)·10¹² + 0.5). */
   private def gridLong(t: Double): Long =
-    math.floor(roundHalfUp(t, 12) * 1e12 + 0.5).toLong
+    math.floor(Rounds.roundHalfUp(t, 12) * 1e12 + 0.5).toLong
 
   /** @param idCol unique integral row id — seeds are the k lowest-id
     *   rows; |id| < 2⁵³
@@ -191,7 +185,7 @@ object Lloyd {
     // Σk·10⁻¹² through the string-exponent parse (Acc.value would round
     // twice once Σk passes 2⁵³), then round(…, 6)
     val rows = (0 until k).filter(c => acc.long(c) > 0).map { c =>
-      Row.fromSeq(Seq[Any](c, acc.long(c), roundHalfUp(acc.detSum(k + c), 6)) ++
+      Row.fromSeq(Seq[Any](c, acc.long(c), Rounds.roundHalfUp(acc.detSum(k + c), 6)) ++
         cent(c))
     }
     val schema = StructType(Seq(

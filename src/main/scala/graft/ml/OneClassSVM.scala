@@ -63,10 +63,11 @@ object OneClassSVM {
   }
 
   /** DuckDB twin of [[fitPredict]]'s aggregate summary — the full GD
-    * trajectory unrolled as chained CTEs like SGD.linearGDSql: the RFF
-    * constants inline as the identical double literals, every gradient
-    * runs through the same 12-decimal detSum grid, weights/ρ round to
-    * 10 decimals per step, and the finishing ρ is the rank-k margin.
+    * trajectory unrolled as chained 1-row CTEs (the device of
+    * [[SGD.linearGDSql]]): the RFF constants inline as the identical
+    * double literals, every gradient runs through the 12-decimal detSum
+    * grid the Spark rounds sum on, weights/ρ round to 10 decimals per
+    * step, and the finishing ρ is the rank-k non-NULL margin.
     * Emits one row (n, n_outliers, min_score, max_score). Cross-engine
     * cos() ulp differences sit ~4 orders below the rounding grids. */
   def fitPredictSummarySql(table: String, xSqls: Seq[String],
@@ -178,11 +179,13 @@ object OneClassSVM {
     // projections w·z (Schölkopf's KKT condition) — set it exactly so
     // is_outlier flags the ν-fraction regardless of GD step-size. The
     // k-th smallest margin = max of the k smallest (value-based, no
-    // row-order dependence).
+    // row-order dependence). NULL margins sort last, as in the twin's
+    // ROW_NUMBER() OVER (ORDER BY m ASC).
     val margin = (0 until d).map(j => col(s"z$j") * lit(w(j))).reduce(_ + _)
     val k = math.max(1, math.floor(nu * n).toInt)
-    val mCol = scored.select(margin.as("__m")).orderBy(col("__m").asc).limit(k)
-      .agg(max(col("__m"))).head()
+    val mCol = scored.select(margin.as("__m")).orderBy(col("__m").asc_nulls_last)
+      .limit(k).agg(max(col("__m"))).head()
+    require(!mCol.isNullAt(0), "one-class SVM: every margin is NULL (filter or impute NULLs first)")
     val rho = math.rint(mCol.getDouble(0) * 1e10) / 1e10
     scored.withColumn("score", round(margin - rho, 6))
       .withColumn("is_outlier", (col("score") < 0).cast("int"))

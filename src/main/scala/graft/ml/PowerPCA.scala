@@ -114,9 +114,7 @@ object PowerPCA {
         val a = math.abs(v(j)); if (a > bestA) { bestA = a; best = j }
         j += 1
       }
-      val evr = new java.math.BigDecimal(lam / trace)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      Row(i + 1, lam, evr, best)
+      Row(i + 1, lam, Rounds.roundHalfUp(lam / trace, 6), best)
     }
     df.sparkSession.createDataFrame(
       df.sparkSession.sparkContext.parallelize(rows, 1), schema)

@@ -1,6 +1,6 @@
 package graft.ml
 
-import java.math.BigInteger
+import java.math.{BigInteger, RoundingMode}
 import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -30,7 +30,9 @@ import org.apache.spark.util.LongAccumulator
   *    [[graft.core.Tables.scaledLongSum]] and of its SQL twin, which
   *    round twice once the sum passes 2⁵³. Its `detSum` parses "Σk
   *    E-12" and rounds once, as [[graft.core.Tables.detSumFast]] does.
-  *  - ONE ROUNDING ([[roundScaled]]) of a term onto its integer grid.
+  *  - ONE ROUNDING ([[roundScaled]]) of a term onto its integer grid,
+  *    and one driver-side twin of Catalyst's `round` ([[roundHalfUp]])
+  *    for the results.
   *  - ONE PASS ([[pass]]): one job per round over the cache, plus the
   *    count + max|x| [[envelope]] pass. Lloyd and Bisect fold their
   *    envelope and seeding into one first pass and count their clusters
@@ -128,11 +130,25 @@ private[ml] object Rounds {
     * drift past 2⁵² — and negating for t < 0 gives away-from-zero, the
     * convention of DuckDB's ROUND. NOT Catalyst's `round`, which rounds
     * the product's shortest decimal repr: learners whose terms Catalyst
-    * computes (Lloyd's [[graft.core.Tables.scaledLongTerm]]) keep them. */
+    * computes (Lloyd's [[graft.core.Tables.scaledLongTerm]]) keep them.
+    * A NaN product or one past 2⁶² in magnitude (a diverged fit) fails,
+    * as Catalyst's ANSI cast of the rounded product to a long does,
+    * instead of saturating and overflowing an [[Acc]] slot. */
   def roundScaled(v: Double, grid: Double): Long = {
     val t = v * grid
+    if (!(math.abs(t) <= Acc.MaxTerm))
+      throw new ArithmeticException(s"$v on the $grid grid is NaN or past 2^62")
     if (t >= 0) Math.round(t) else -Math.round(-t)
   }
+
+  /** Catalyst's `round(v, scale)` on a double: HALF_UP at `scale` of
+    * the SHORTEST decimal repr (BigDecimal.valueOf), not of the exact
+    * binary value — the two differ at decimal ties: 0.5000005 is
+    * 0.500001 here and 0.5 by `new BigDecimal(v)`. NaN and ±Inf pass
+    * through, as in Catalyst. */
+  def roundHalfUp(v: Double, scale: Int): Double =
+    if (v.isNaN || v.isInfinite) v
+    else java.math.BigDecimal.valueOf(v).setScale(scale, RoundingMode.HALF_UP).doubleValue
 
   /** Exact integer sums in `n` slots. A slot stays a long while
     * |sum| ≤ 2⁶² and spills into a BigInteger past that, so any term
@@ -183,6 +199,8 @@ private[ml] object Rounds {
 
   object Acc {
     private val SpillAt = Long.MaxValue >> 1
+    /** 2⁶²: the largest term magnitude `add` takes without overflow. */
+    private[Rounds] val MaxTerm = (1L << 62).toDouble
   }
 
   /** One round: broadcasts `state`, folds every chunk of a partition
@@ -199,7 +217,8 @@ private[ml] object Rounds {
   }
 
   /** (rows, max |x|) over the first `width` doubles of every
-    * `stride`-wide row — the count + envelope pass; 0.0 when empty. */
+    * `stride`-wide row — the count + envelope pass; 0.0 when empty, NaN
+    * when any of them is NaN (as Catalyst's `max` ranks NaN highest). */
   def envelope(chunks: RDD[Array[Double]], stride: Int,
                width: Int): (Long, Double) =
     chunks.aggregate((0L, 0.0))({ case ((n0, mx0), ch) =>
@@ -208,7 +227,7 @@ private[ml] object Rounds {
       while (off < ch.length) {
         var i = 0
         while (i < width) {
-          val a = math.abs(ch(off + i)); if (a > mx) mx = a; i += 1
+          mx = math.max(mx, math.abs(ch(off + i))); i += 1
         }
         off += stride
       }

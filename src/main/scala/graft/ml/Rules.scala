@@ -166,8 +166,6 @@ object Rules {
                          rules: Seq[CN2Rule]): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    def r6(v: Double) = new java.math.BigDecimal(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val schema = StructType(Seq(
       StructField("rule_order", IntegerType, nullable = false),
       StructField("feature", StringType, nullable = false),
@@ -178,7 +176,7 @@ object Rules {
       StructField("laplace", DoubleType, nullable = false)))
     spark.createDataFrame(
       java.util.Arrays.asList(rules.map(r => Row(r.order, r.feature,
-        r.value, r.predicted, r.nCorrect, r.covered, r6(r.laplace))): _*),
+        r.value, r.predicted, r.nCorrect, r.covered, Rounds.roundHalfUp(r.laplace, 6))): _*),
       schema)
   }
 
@@ -322,8 +320,6 @@ object Rules {
                           rules: Seq[URule]): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    def r6(v: Double) = new java.math.BigDecimal(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val schema = StructType(Seq(
       StructField("cls", StringType, nullable = false),
       StructField("rule_order", IntegerType, nullable = false),
@@ -334,7 +330,7 @@ object Rules {
       StructField("laplace", DoubleType, nullable = false)))
     spark.createDataFrame(
       java.util.Arrays.asList(rules.map(r => Row(r.cls, r.order,
-        r.feature, r.value, r.nCorrect, r.covered, r6(r.laplace))): _*),
+        r.feature, r.value, r.nCorrect, r.covered, Rounds.roundHalfUp(r.laplace, 6))): _*),
       schema)
   }
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *      thresholds are EXACT percentiles (one aggregation), so the
   *      learned sheet is deterministic across partitionings;
   *   2. sparse integer points — ONE deterministic full-batch logistic
-  *      fit over all indicators (SGD.logRegGD, broadcast-weights plan),
+  *      fit over all indicators (SGD.logRegGD, on the round kernel),
   *      keep the `numParams` largest-|w| indicators and scale the kept
   *      weights to integers in [−maxPoints, maxPoints] (fasterrisk's
   *      sparsity + bounded-coefficient constraints);

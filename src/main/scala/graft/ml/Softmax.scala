@@ -122,8 +122,7 @@ object Softmax {
       (theta, Array.tabulate(c)(res.long), Array.tabulate(c)(i => res.long(c + i)),
         res.long(2 * c), nD)
     } finally arrRdd.unpersist(false)
-    val acc6 = new java.math.BigDecimal(correct.toDouble / nD)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val acc6 = Rounds.roundHalfUp(correct.toDouble / nD, 6)
 
     val schema = StructType(
       StructField("class", IntegerType, nullable = false) +:

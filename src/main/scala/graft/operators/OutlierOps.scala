@@ -153,6 +153,32 @@ object OutlierOps {
       .select(col("a_id"), round(col("mean_lrd_b") / col("lrd"), 6).as("lof"))
   }
 
+  /** [[mahalanobisND]]'s means and sample covariance in one
+    * aggregation, bit-equal to [[exactMean]] and [[exactCovarSamp]]:
+    * the means and the i ≠ j entries ride the exactSumFast grid
+    * (callers keep |fᵢ| and |fᵢ·fⱼ| below its 2.25e9 envelope); the
+    * diagonal keeps Σf² on the decimal path, since squares of
+    * money-scale features (l_extendedprice² ≈ 1.3e10) leave it. */
+  private[graft] def mahalanobisMoments(df: DataFrame, features: Seq[String])
+      : (Seq[Double], Array[Array[Double]]) = {
+    val d = features.length
+    require(d >= 1, "mahalanobisND needs at least one feature")
+    val aggs = features.map(f => exactMeanFast(col(f)).as(s"__m_$f")) ++
+      (for { i <- 0 until d; j <- i until d } yield {
+        val (fi, fj) = (col(features(i)), col(features(j)))
+        (if (i == j) exactVarSampFast(fi, sqFast = false)
+         else exactCovarSampFast(fi, fj)).as(s"__c_${i}_$j")
+      })
+    val row = df.agg(aggs.head, aggs.tail: _*).first()
+    val means = features.map(f => row.getDouble(row.fieldIndex(s"__m_$f")))
+    val cov = Array.ofDim[Double](d, d)
+    for (i <- 0 until d; j <- i until d) {
+      val v = row.getDouble(row.fieldIndex(s"__c_${i}_$j"))
+      cov(i)(j) = v; cov(j)(i) = v
+    }
+    (means, cov)
+  }
+
   /** General N-dimensional Mahalanobis distance (reference
     * Orange/distance/distance.py:807-868 MahalanobisDistance; the
     * EllipticEnvelope outlier analogue): ONE aggregation produces the
@@ -166,24 +192,11 @@ object OutlierOps {
     * differential twins (MahalanobisSpec pins this general path against
     * them). Adds column `md2` = (x−μ)ᵀ Σ⁻¹ (x−μ). */
   def mahalanobisND(df: DataFrame, features: Seq[String]): DataFrame = {
-    val d = features.length
-    require(d >= 1, "mahalanobisND needs at least one feature")
-    // exactSumFast grid: callers keep |fᵢ·fⱼ| < 2.25e9 (every caller
-    // feeds pre-scaled or sub-acctbal features; squares ≤ ~1.2e8)
-    val aggs = features.map(f => exactMeanFast(col(f)).as(s"__m_$f")) ++
-      (for { i <- 0 until d; j <- i until d } yield
-        exactCovarSampFast(col(features(i)), col(features(j))).as(s"__c_${i}_$j"))
-    val row = df.agg(aggs.head, aggs.tail: _*).first()
-    val means = features.map(f => row.getDouble(row.fieldIndex(s"__m_$f")))
-    val cov = Array.ofDim[Double](d, d)
-    for (i <- 0 until d; j <- i until d) {
-      val v = row.getDouble(row.fieldIndex(s"__c_${i}_$j"))
-      cov(i)(j) = v; cov(j)(i) = v
-    }
+    val (means, cov) = mahalanobisMoments(df, features)
     val inv = invertGaussJordan(cov)
     val dx = features.zip(means).map { case (f, m) =>
       col(f).cast(DoubleType) - lit(m) }
-    val md2 = (for { i <- 0 until d; j <- 0 until d } yield
+    val md2 = (for { i <- dx.indices; j <- dx.indices } yield
       dx(i) * dx(j) * lit(inv(i)(j))).reduce(_ + _)
     df.withColumn("md2", md2)
   }

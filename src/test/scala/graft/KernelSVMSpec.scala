@@ -32,28 +32,19 @@ class KernelSVMSpec extends SparkSpec {
     assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq)
   }
 
-  test("FeatureGen fit ≡ direct-feature fit (persisted expansion)") {
+  test("FeatureGen recompute-per-pass branch ≡ default fit") {
+    // force the raw-cache + expand-per-pass branch by shrinking the
+    // expanded-feature budget below this fixture's ~(32+1)·8·400 B; a
     // two-column raw set exercises the left-fold order in expandRow
     val df2 = (0 until 400).map(i =>
       (i.toLong, i / 400.0, (i % 13) / 13.0)).toDF("id", "x", "x2")
-    val xs = Seq(col("x"), col("x2"))
-    val gen = KernelSVM.rbfSvcFit(df2, xs, yCol).collect()
-    val dir = KernelSVM.rbfSvcFit(df2, xs, yCol, useGen = false).collect()
-    assert(gen.map(_.toSeq).toSeq == dir.map(_.toSeq).toSeq,
-      "gen-path fit diverged from the direct Column-feature fit")
-  }
-
-  test("FeatureGen recompute-per-pass branch ≡ direct fit") {
-    // force the raw-cache + expand-per-pass branch by shrinking the
-    // expanded-feature budget below this fixture's ~(32+1)·8·400 B
-    spark.conf.set("graft.sgd.featCacheMaxBytes", "1024")
-    try {
-      val gen = KernelSVM.rbfSvcFit(interval, Seq(col("x")), yCol).collect()
-      val dir = KernelSVM.rbfSvcFit(interval, Seq(col("x")), yCol,
-        useGen = false).collect()
-      assert(gen.map(_.toSeq).toSeq == dir.map(_.toSeq).toSeq,
-        "recompute-per-pass fit diverged from the direct fit")
-    } finally spark.conf.unset("graft.sgd.featCacheMaxBytes")
+    for ((df, xs) <- Seq((interval, Seq(col("x"))), (df2, Seq(col("x"), col("x2"))))) {
+      val raw = KernelSVM.rbfSvcFitWithin(df, xs, yCol, 32, 8.0, 30, 1.0,
+        cacheMaxBytes = 1024).collect()
+      val dflt = KernelSVM.rbfSvcFit(df, xs, yCol).collect()
+      assert(raw.map(_.toSeq).toSeq == dflt.map(_.toSeq).toSeq,
+        "recompute-per-pass fit diverged from the default fit")
+    }
   }
 
   // --- random-feature MLP regression (regression/neural_network.py:20) --

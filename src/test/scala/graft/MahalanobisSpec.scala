@@ -78,6 +78,27 @@ class MahalanobisSpec extends SparkSpec {
     assert(maxDiff < 1e-8, s"max |nd - closed| = $maxDiff")
   }
 
+  test("mahalanobisND's moments are bit-equal to the all-decimal exactMean / exactCovarSamp") {
+    // l_extendedprice² (≈ 1.3e10) leaves the 2.25e9 fast-grid envelope;
+    // on the 684 rows above 92500 the fast-grid Σy² misses the decimal
+    // one by 1e-6, which moves var(y) by 1.4e-6
+    val li = spark.read.parquet(s"$sf/lineitem.parquet")
+      .select(col("l_quantity").cast("double").as("x"),
+        col("l_extendedprice").cast("double").as("y"),
+        col("l_discount").cast("double").as("z"))
+    val fs = Seq("x", "y", "z")
+    def bits(v: Double) = java.lang.Double.doubleToRawLongBits(v)
+    for (df <- Seq(li, li.filter(col("y") > 92500))) {
+      val (means, cov) = OutlierOps.mahalanobisMoments(df, fs)
+      val want = df.agg(exactMean(col(fs.head)), fs.tail.map(f => exactMean(col(f))) ++
+        (for (a <- fs; b <- fs) yield exactCovarSamp(col(a), col(b))): _*).first()
+      for (i <- fs.indices) assert(bits(means(i)) == bits(want.getDouble(i)), fs(i))
+      for (i <- fs.indices; j <- fs.indices)
+        assert(bits(cov(i)(j)) == bits(want.getDouble(3 + 3 * i + j)),
+          s"cov(${fs(i)}, ${fs(j)}) = ${cov(i)(j)}, decimal ${want.getDouble(3 + 3 * i + j)}")
+    }
+  }
+
   test("mahalanobisND on independent unit-variance features ~ squared z-norm") {
     // x ~ {-1, 1}, y ~ {-2, 2} independent: Σ = diag(var x, var y);
     // md2 of (1, 2) = 1/vx + 4/vy

@@ -46,7 +46,7 @@ class OneClassSVMSpec extends SparkSpec {
     }
     val k = math.max(1, math.floor(nu * n).toInt)
     val mCol = base.crossJoin(broadcast(wDF(w)))
-      .select(margin.as("__m")).orderBy(col("__m").asc).limit(k)
+      .select(margin.as("__m")).orderBy(col("__m").asc_nulls_last).limit(k)
       .agg(max(col("__m"))).head()
     rho = math.rint(mCol.getDouble(0) * 1e10) / 1e10
     val out = base.crossJoin(broadcast(wDF(w)))
@@ -118,6 +118,26 @@ class OneClassSVMSpec extends SparkSpec {
       assert(!p.contains(op), p)
     // the count pass, one pass per round, the rank-k plan, the consume
     assert(jobs == 1 + iterations + 1 + 1, ps.mkString("\n"))
+  }
+
+  test("rank-k rho skips NULL margins, and an all-NULL input is refused") {
+    // 12 NULL-feature rows of 62: k = floor(0.1 * 62) = 6 < 12, so
+    // NULLs sorted first would fill the whole rank-k window
+    val xs = (1 to 50).map(i => (i.toLong, Option(math.sin(i * 0.7) * 0.3)))
+    val df = (xs ++ (51 to 62).map(i => (i.toLong, Option.empty[Double])))
+      .toDF("id", "x")
+    val scores = OneClassSVM.fitPredict(df, Seq(("x", col("x"))), nu = 0.1,
+        d = 8, gamma = 1.0, iterations = 6)
+      .select("id", "score").collect()
+    assert(scores.count(_.isNullAt(1)) == 12)
+    // ρ is the 6th smallest non-NULL margin: it scores 0, the 5 below
+    // it score negative
+    val s = scores.filterNot(_.isNullAt(1)).map(_.getDouble(1)).sorted
+    assert(s.take(5).forall(_ < 0) && s(5) == 0.0 && s(6) > 0, s.take(8).mkString(", "))
+    val allNull = Seq((1L, Option.empty[Double]), (2L, Option.empty[Double])).toDF("id", "x")
+    val e = intercept[IllegalArgumentException](
+      OneClassSVM.fitPredict(allNull, Seq(("x", col("x"))), d = 4, iterations = 1))
+    assert(e.getMessage.contains("every margin is NULL"), e.getMessage)
   }
 
   test("planted far outliers score below the dense blob") {

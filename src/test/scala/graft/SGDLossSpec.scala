@@ -57,4 +57,43 @@ class SGDLossSpec extends SparkSpec {
       iterations = 3, lr = 0.5, SGD.HingeLoss).first().toSeq
     assert(fitOn(1) == fitOn(7))
   }
+
+  test("a fit is t + 3 jobs: envelope, t rounds, metric, consume; no join or aggregate") {
+    val df = (1 to 120).map(i => (i / 120.0, (i * 7 % 120) / 120.0,
+      if (i % 3 == 0) 1.0 else 0.0)).toDF("a", "b", "y")
+    val narrow = Seq(("a", col("a")), ("b", col("b")))
+    val wide = (0 until 9).map(i => (s"w$i", col("b") * (i / 9.0)))
+    val iterations = 4
+    for (feats <- Seq(narrow, wide); loss <- Seq(SGD.LogisticLoss, SGD.SquaredLoss)) {
+      val (jobs, ps) = probe(s"sgd-${feats.size}-${loss.metricName}") {
+        Bench.consume(SGD.linearGD(df, feats, col("y"), iterations, 0.5, loss))
+      }
+      assert(jobs == iterations + 3, ps.mkString("\n"))
+      // the projection behind the cache and the consume
+      assert(ps.size == 2, ps.mkString("\n"))
+      for (p <- ps; op <- Seq("Join", "Aggregate", "Exchange")) assert(!p.contains(op), p)
+    }
+  }
+
+  test("empty input: zero weights and a NULL metric") {
+    val empty = Seq.empty[(Double, Double)].toDF("x", "y")
+    for (loss <- Seq(SGD.HingeLoss, SGD.EpsilonInsensitiveLoss(0.05))) {
+      val out = SGD.linearGD(empty, Seq(("x", col("x"))), col("y"), 3, 0.5, loss)
+      assert(out.schema.map(f => (f.name, f.nullable)) ==
+        Seq(("w_x", false), ("intercept", false), (loss.metricName, true)))
+      assert(out.collect().map(_.toSeq).toSeq == Seq(Seq(0.0, 0.0, null)))
+    }
+  }
+
+  test("the MSE pass is the Catalyst round(scaledLongSum((z - y)^2) / n, 6)") {
+    val df = (1 to 300).map(i => ((i * 37 % 300) / 300.0, (i % 11) / 7.0))
+      .toDF("x", "y")
+    val fit = SGD.linearGD(df, Seq(("x", col("x"))), col("y"), 5, 0.5,
+      SGD.SquaredLoss).first()
+    val z = col("x") * lit(fit.getDouble(0)) + lit(fit.getDouble(1))
+    val want = df.agg(round(graft.core.Tables.scaledLongSum((z - col("y")) * (z - col("y"))) /
+      lit(300.0), 6)).first().getDouble(0)
+    assert(fit.getDouble(2) == want && want > 0.0)
+    assert(fit.schema("mse").nullable && !fit.schema("intercept").nullable)
+  }
 }

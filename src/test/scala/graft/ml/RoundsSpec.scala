@@ -8,7 +8,8 @@ import graft.core.Tables
 
 /** Pins for the shared round kernel: the exact accumulator across its
   * spill boundary and against Catalyst's scaledLongSum, the HALF_UP
-  * rounding, and cache release by every learner that runs on it. */
+  * roundings against Catalyst's `round`, the envelope, SGD's refusals,
+  * and cache release by every learner that runs on it. */
 class RoundsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -72,6 +73,12 @@ class RoundsSpec extends SparkSpec {
     assert(Rounds.roundScaled(-0.49999999999999994, 1.0) == 0L)
   }
 
+  test("roundScaled fails on NaN and past 2^62 instead of saturating") {
+    assert(Rounds.roundScaled(-4.6e6, 1e12) == -4600000000000000000L)
+    for (v <- Seq(4.62e6, -4.62e6, 1e300, Double.NaN, Double.PositiveInfinity))
+      intercept[ArithmeticException](Rounds.roundScaled(v, 1e12))
+  }
+
   private def persisted = spark.sparkContext.getPersistentRDDs.keySet
 
   test("SGD fits leave no persisted RDD behind") {
@@ -80,15 +87,85 @@ class RoundsSpec extends SparkSpec {
       .toDF("a", "b", "y")
     val before = persisted
     val narrow = Seq(("a", col("a")), ("b", col("b")))
-    // k > 8: the envelope pass runs on the chunk cache
     val wide = (0 until 9).map(i => (s"w$i", col("a") * (i / 9.0)))
-    // outside the envelope: the aggregate fallback
-    val outside = Seq(("a", col("a") * 3.0))
-    for (feats <- Seq[Seq[(String, Column)]](narrow, wide, outside)) {
+    for (feats <- Seq[Seq[(String, Column)]](narrow, wide)) {
       val out = SGD.linearGD(df, feats, col("y"), 2, 0.5, SGD.LogisticLoss)
       assert(persisted == before)
       out.collect()
       assert(persisted == before)
+    }
+  }
+
+  private lazy val sgdInput = (1 to 50).map(i =>
+    (Option(i / 50.0), if (i % 2 == 0) 1.0 else 0.0)).toDF("a", "y")
+  private def sgdFit(df: org.apache.spark.sql.DataFrame, a: Column, y: Column) =
+    SGD.linearGD(df, Seq(("a", a)), y, 2, 0.5, SGD.LogisticLoss)
+
+  test("SGD refuses a NULL cell and leaves no persisted RDD behind") {
+    val before = persisted
+    for ((df, y) <- Seq(
+        (sgdInput.union(Seq((Option.empty[Double], 1.0)).toDF("a", "y")), col("y")),
+        (sgdInput, when(col("a") > 0.5, col("y")))))
+    {
+      val e = intercept[IllegalArgumentException](sgdFit(df, col("a"), y))
+      assert(e.getMessage.contains("filter or impute NULLs first"), e.getMessage)
+      assert(persisted == before)
+    }
+  }
+
+  test("SGD refuses |x| > 1 and NaN, and leaves no persisted RDD behind") {
+    val before = persisted
+    val wide = (0 until 9).map(i => (s"w$i", col("a") * (i / 4.0)))
+    val over = intercept[IllegalArgumentException](
+      SGD.linearGD(sgdInput, wide, col("y"), 2, 0.5, SGD.HingeLoss))
+    assert(over.getMessage.contains("SGD envelope: max|x|=2.0 (pre-scale features to [-1,1])"),
+      over.getMessage)
+    assert(persisted == before)
+    val nan = intercept[IllegalArgumentException](
+      sgdFit(sgdInput, when(col("a") > 0.9, lit(Double.NaN)).otherwise(col("a")), col("y")))
+    assert(nan.getMessage.contains("max|x|=NaN"), nan.getMessage)
+    assert(persisted == before)
+  }
+
+  test("envelope propagates NaN, wherever it sits in the chunk") {
+    val sc = spark.sparkContext
+    // stride 2, width 1: the second slot of each row is outside the envelope
+    for (ch <- Seq(Array(0.5, 9.0, Double.NaN, 0.0, 0.25, 0.0),
+                   Array(Double.NaN, 0.0, 0.75, 0.0)))
+      assert(Rounds.envelope(sc.parallelize(Seq(ch), 1), 2, 1)._2.isNaN)
+    assert(Rounds.envelope(sc.parallelize(Seq(Array(0.5, 0.0), Array(Double.NaN, 0.0),
+      Array(-0.75, 9.0)), 3), 2, 1) match { case (n, m) => n == 3 && m.isNaN })
+    assert(Rounds.envelope(sc.parallelize(Seq(Array(0.5, 9.0, -0.75, 9.0)), 1), 2, 1) ==
+      ((2L, 0.75)))
+  }
+
+  test("roundHalfUp is Catalyst's round(v, 6) at decimal ties") {
+    // 0.5000005 is 3,000,003 / 6,000,000: a tie of the shortest decimal
+    // repr whose exact binary value lies below it
+    val ties = Seq(0.5000005, 5e-7, 0.1234565, -0.5000005, 2.5e-6)
+    val spark6 = ties.toDF("v").select(round(col("v"), 6)).collect().map(_.getDouble(0))
+    assert(ties.map(Rounds.roundHalfUp(_, 6)) == spark6.toSeq)
+    assert(Rounds.roundHalfUp(3000003.0 / 6000000.0, 6) == 0.500001)
+    assert(new java.math.BigDecimal(0.5000005)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue == 0.5)
+    assert(Rounds.roundHalfUp(Double.NaN, 6).isNaN)
+    assert(Rounds.roundHalfUp(Double.NegativeInfinity, 6) == Double.NegativeInfinity)
+  }
+
+  test("roundScaled(t, 1e12) is Catalyst's scaledLongTerm: round(t * 1e12, 0) as a long") {
+    val rnd = new scala.util.Random(7)
+    // seeded ties: t·10¹² lands on or next to k + 0.5; then magnitudes
+    // whose product passes 2⁵² (≈ 4.5e15), where every double is integral
+    val ties = (1 to 400).flatMap { _ =>
+      val t = (rnd.nextInt(2000000) - 1000000 + 0.5) / 1e12
+      Seq(t, math.nextUp(t), math.nextDown(t))
+    }
+    val big = (1 to 200).map(_ => (rnd.nextDouble() * 4e6 + 4.6e3) * (if (rnd.nextBoolean()) 1 else -1))
+    val ts = ties ++ big ++ Seq(0.0, -0.0, 0.5e-12, -0.5e-12, 4503.6, 4.6e6)
+    val catalyst = ts.toDF("t").select(Tables.scaledLongTerm(col("t")))
+      .collect().map(_.getLong(0))
+    ts.zip(catalyst).foreach { case (t, c) =>
+      assert(Rounds.roundScaled(t, 1e12) == c, s"t=$t")
     }
   }
 
